@@ -12,7 +12,6 @@ the operator layer (same UDF signature).
 from __future__ import annotations
 
 import hashlib
-from typing import Iterable
 
 import numpy as np
 
@@ -47,10 +46,6 @@ def embed_text(text: str) -> np.ndarray:
     if norm > 0:
         acc /= norm
     return acc.astype(np.float32)
-
-
-def embed_many(texts: Iterable[str]) -> np.ndarray:
-    return np.stack([embed_text(t or "") for t in texts])
 
 
 def cosine_similarity(a: np.ndarray, b: np.ndarray) -> float:

@@ -98,16 +98,20 @@ def fake_pil_decoder_factory():
 
     from ..operators.multimodal import _decode_image
 
+    fake = {"PIL": pil, "PIL.Image": image_mod}
+
     def decode(payload):
-        installed = "PIL" not in sys.modules
-        if installed:
-            sys.modules["PIL"] = pil
-            sys.modules["PIL.Image"] = image_mod
+        # always shadow: a runtime that ships a real PIL must still take
+        # the fake, and gets its own modules back afterwards
+        saved = {name: sys.modules.get(name) for name in fake}
+        sys.modules.update(fake)
         try:
             return _decode_image(payload)
         finally:
-            if installed:
-                sys.modules.pop("PIL", None)
-                sys.modules.pop("PIL.Image", None)
+            for name, mod in saved.items():
+                if mod is None:
+                    sys.modules.pop(name, None)
+                else:
+                    sys.modules[name] = mod
 
     return decode

@@ -11,8 +11,11 @@ path) so they hold at 10^12 rows:
 - n-gram jaccard: inverted-index self-join on shingles + exact similarity
 - embedding cosine: sign-bit LSH bucket join + exact cosine inside buckets
 
-Shared hash: first 15 hex chars of md5 → BIGINT (portable to the DuckDB
-oracles in plans.queries, deterministic across runs/engines)."""
+Shared hash: ``h60`` — first 15 hex chars of md5 → BIGINT, deterministic
+across runs and engines (DuckDB spells it ``plans.queries.H60_SQL``). It is
+the only Spark-side definition: the registry queries import it as
+``_h60``, and ``word_shingles`` is likewise the one word-shingler the
+dedup, fingerprint and n-gram Jaccard plans share."""
 
 from __future__ import annotations
 
@@ -20,6 +23,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .similarity import dot
 
 if TYPE_CHECKING:
     from pyspark.sql import Column, DataFrame
@@ -38,7 +43,7 @@ def exact_dedup(df: "DataFrame", text_col: str, id_col: str) -> "DataFrame":
     )
 
 
-def _word_shingles(df: "DataFrame", text_col: str, id_col: str, n: int = 3) -> "DataFrame":
+def word_shingles(df: "DataFrame", text_col: str, id_col: str, n: int = 3) -> "DataFrame":
     """Distinct word n-gram shingles per document via posexplode + lead."""
     toks = df.select(
         F.col(id_col).alias("_id"),
@@ -60,7 +65,7 @@ def minhash_signatures(
 ) -> "DataFrame":
     """(id, hash_idx, minhash): n_hashes independent salted-hash families.
     Long format keeps the plan one explode + one agg at any n_hashes."""
-    sh = _word_shingles(df, text_col, id_col, shingle_n)
+    sh = word_shingles(df, text_col, id_col, shingle_n)
     idx = F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("hash_idx")
     salted = sh.select("_id", "shingle", idx)
     return (
@@ -172,7 +177,7 @@ def ngram_jaccard_pairs(
     separate thread, so with an observation we join the full frequency
     table, observe, then filter; each dropped shingle contributes
     _df × (1/_df) = 1 to the dropped count."""
-    sh = _word_shingles(df, text_col, id_col, shingle_n)
+    sh = word_shingles(df, text_col, id_col, shingle_n)
     if df_max is not None:
         freq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
         if observation is None:
@@ -244,15 +249,11 @@ def embedding_cosine_dups(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
         _sign_bucket(F.col(vec_col), n_bits).alias("bucket"),
     )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v,
-    )
 
     def _score(pairs: "DataFrame") -> "DataFrame":
         return (
             pairs.where(F.col("id_a") < F.col("id_b"))
-            .withColumn("cosine", F.round(dot, 6))
+            .withColumn("cosine", F.round(dot(F.col("va"), F.col("vb")), 6))
             .where(F.col("cosine") >= threshold)
             .select("id_a", "id_b", "cosine")
         )

@@ -61,15 +61,10 @@ PAGE_TYPE = StructType(
 )
 
 
-def _extract_row(
-    kind: str, html: bytes | None, reject_reason: str | None = None, models=None
-):
+def _extract_row(kind: str, html: bytes | None, reject_reason: str | None, models):
     """(extracted_text, ocr_confidence, entities, status, error)."""
     from ..core import mean_confidence, word_confidence
-    from ..core.models import DEFAULT_SEAM
 
-    if models is None:
-        models = DEFAULT_SEAM.resolve()
     if reject_reason is not None:
         return None, None, None, "failed", reject_reason
     try:
@@ -134,10 +129,6 @@ def make_extract_partition(seam=None):
             )
 
     return extract_partition
-
-
-# default-seam body (kept for existing callers/tests)
-extract_partition = make_extract_partition()
 
 
 def make_ner_udf(seam=None):

@@ -1,7 +1,7 @@
 """Similarity search over an embedding column (array<float>).
 
 - ``brute_force_topk``: exact dot-product top-k, entirely JVM-side
-  (zip_with/aggregate → TakeOrderedAndProject). The correctness baseline.
+  (``dot`` → TakeOrderedAndProject). The correctness baseline.
 - ``IvfIndex``: inverted-file ANN — deterministic centroids, one-shuffle
   partition assignment, searches probe only ``nprobe`` partitions. The
   100 TB path: the scan prunes to nprobe/n_centroids of the corpus.
@@ -19,23 +19,28 @@ if TYPE_CHECKING:
     from pyspark.sql import Column, DataFrame
 
 
-def dot_lit(vec_col, query_vec: list[float]) -> "Column":
-    """JVM-side dot product against a literal vector (double precision).
+def dot(a, b) -> "Column":
+    """JVM-side dot product of two array columns: both sides cast to
+    double, summed as a left fold from 0.0 (aggregate over zip_with).
 
-    zip_with + aggregate is the deliberate encoding, measured against the
-    alternatives at 20k rows × 384 dims (round 3): a flat 384-term
-    ``vec[i] * q_i`` add chain overflows the driver stack when built as
-    Column nodes, and even SQL-parsed it runs 3× SLOWER (the oversized
-    expression kicks the Project out of whole-stage codegen into an
-    interpreted fallback that is worse than the HOF machinery). The
-    left fold also matches the DuckDB oracles' sequential list_reduce
-    bit-for-bit, which a pairwise/SIMD summation would not."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    The one definition every vector score in the package uses. The left
+    fold matches the DuckDB oracles' sequential list_reduce bit-for-bit,
+    which a pairwise/SIMD summation would not. Measured against the alternatives at 20k rows × 384 dims (round
+    3): a flat 384-term ``vec[i] * q_i`` add chain overflows the driver
+    stack when built as Column nodes, and even SQL-parsed it runs 3×
+    SLOWER (the oversized expression kicks the Project out of whole-stage
+    codegen into an interpreted fallback that is worse than the HOF
+    machinery)."""
     return F.aggregate(
-        F.zip_with(vec_col, q, lambda a, b: a.cast("double") * b.cast("double")),
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
+
+
+def dot_lit(vec_col, query_vec: list[float]) -> "Column":
+    """``dot`` against a literal query vector."""
+    return dot(vec_col, F.array(*[F.lit(float(x)) for x in query_vec]))
 
 
 def brute_force_topk(
@@ -81,17 +86,7 @@ def batch_topk(
         F.col(query_id_col),
         F.col(id_col),
         F.spark_partition_id().alias("_pid"),
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col(vec_col), F.col(query_vec_col),
-                    lambda a, b: a.cast("double") * b.cast("double"),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            6,
-        ).alias("similarity"),
+        F.round(dot(F.col(vec_col), F.col(query_vec_col)), 6).alias("similarity"),
     )
     order = [F.desc("similarity"), F.asc(id_col)]
     w_pre = Window.partitionBy(query_id_col, "_pid").orderBy(*order)
@@ -210,14 +205,7 @@ class IvfIndex:
         scored = F.transform(
             F.col("cents"),
             lambda c: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(self.vec_col), c["cvec"],
-                        lambda a, b: a.cast("double") * b,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ).alias("score"),
+                dot(F.col(self.vec_col), c["cvec"]).alias("score"),
                 (-c["cid"]).alias("ncid"),
             ),
         )

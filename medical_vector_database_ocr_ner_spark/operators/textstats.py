@@ -8,7 +8,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
-from .dedup import _word_shingles, h60
+from .dedup import word_shingles, h60
 
 if TYPE_CHECKING:
     from pyspark.sql import Column, DataFrame
@@ -97,7 +97,7 @@ def shingle_fingerprint(
 ) -> "DataFrame":
     """1-permutation minhash over word shingles — a stable 60-bit document
     fingerprint (winnowing-lite)."""
-    sh = _word_shingles(df, text_col, id_col, shingle_n)
+    sh = word_shingles(df, text_col, id_col, shingle_n)
     return (
         sh.groupBy("_id")
         .agg(F.min(h60(F.col("shingle"))).alias("fingerprint"))

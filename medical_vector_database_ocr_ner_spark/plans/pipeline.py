@@ -12,7 +12,8 @@ from typing import TYPE_CHECKING
 from pyspark.sql import functions as F
 
 from ..functions import columns as FX
-from ..operators.extraction import embed_udf
+from ..operators.extraction import make_embed_udf
+from ..operators.similarity import dot_lit
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
@@ -71,22 +72,9 @@ def build_embeddings(
         )
         .dropDuplicates(["vec_id"])
     )
-    if models is not None:
-        from ..operators.extraction import make_embed_udf
-
-        return unique.withColumn(
-            "embedding", make_embed_udf(models)(F.col("doc_text"))
-        )
-    return unique.withColumn("embedding", embed_udf(F.col("doc_text")))
-
-
-def _dot_product(vec_col, query_vec: list[float]):
-    """JVM-side dot product against a literal query vector — delegates to
-    operators.similarity.dot_lit (single source; codegen-friendly literal
-    chain, bit-identical to the old zip_with/aggregate fold)."""
-    from ..operators.similarity import dot_lit
-
-    return dot_lit(vec_col, query_vec)
+    return unique.withColumn(
+        "embedding", make_embed_udf(models)(F.col("doc_text"))
+    )
 
 
 def search_topk(
@@ -108,7 +96,7 @@ def search_topk(
     qvec = [float(x) for x in embed_text(query_text)]
     scored = embeddings.select(
         "vec_id",
-        _dot_product(F.col("embedding"), qvec).alias("similarity"),
+        dot_lit(F.col("embedding"), qvec).alias("similarity"),
         *[F.col(c) for c in (extra_cols or [])],
     )
     topk = scored.orderBy(F.desc("similarity"), F.asc("vec_id")).limit(k)

@@ -23,6 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators import dedup
+from ..operators.dedup import h60 as _h60  # old name: callers stay unedited
+from ..operators.similarity import dot
+from ..operators.textstats import shingle_fingerprint
+
 
 @dataclass
 class QuerySpec:
@@ -35,11 +40,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# 60-bit portable string hash -------------------------------------------------
-
-def _h60(col):  # Spark side
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
+# 60-bit portable string hash (Spark side: operators.dedup.h60) -------------
 
 H60_SQL = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
 
@@ -346,11 +347,7 @@ FROM documents
 def q_exact_dedup_keeper(spark, sf):
     """Exact dedup (hash-groupBy): content-hash groups, min doc_id kept —
     the scalable form of the reference's duplicate check (A8/C10)."""
-    docs = _t(spark, sf, "documents")
-    return (
-        docs.groupBy(F.md5(F.lower("text")).alias("content_key"))
-        .agg(F.min("doc_id").alias("keeper_id"), F.count("*").alias("n_copies"))
-    )
+    return dedup.exact_dedup(_t(spark, sf, "documents"), "text", "doc_id")
 
 
 ORACLE_EXACT_DEDUP = """
@@ -590,17 +587,10 @@ def q_ann_topk_cosine(spark, sf):
     (broadcast one-row query side; distributed TakeOrderedAndProject)."""
     emb = _t(spark, sf, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("embedding"), F.col("qe"),
-            lambda a, b: a.cast("double") * b.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sim = F.round(dot(F.col("embedding"), F.col("qe")), 4)
     return (
         emb.crossJoin(F.broadcast(q))
-        .select("vec_id", F.round(dot, 4).alias("sim"))
+        .select("vec_id", sim.alias("sim"))
         .orderBy(F.desc("sim"), F.asc("vec_id"))
         .limit(10)
     )
@@ -657,12 +647,7 @@ def q_lsh_bucket_histogram(spark, sf):
     """Random-hyperplane LSH bucketing (the ANN scale path): 8 sign bits of
     the leading dims → bucket id; bucket-size histogram."""
     emb = _t(spark, sf, "embeddings")
-    bucket = None
-    for i in range(8):
-        bit = F.when(F.element_at("embedding", i + 1) >= 0, F.lit(1 << i)).otherwise(
-            F.lit(0)
-        )
-        bucket = bit if bucket is None else bucket + bit
+    bucket = dedup._sign_bucket(F.col("embedding"), 8)
     return (
         emb.select(bucket.alias("bucket"))
         .groupBy("bucket")
@@ -751,28 +736,10 @@ GROUP BY a.doc_id
 
 def q_simhash16(spark, sf):
     """SimHash (16-bit): per-token 60-bit hash, bit-weighted majority vote
-    over token counts, packed bucket id."""
-    docs = _t(spark, sf, "documents")
-    tok_counts = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("c"))
-        .withColumn("h", _h60(F.col("tok")))
-    )
-    bits = spark.range(16).select(
-        F.col("id").cast("int").alias("bit"),
-        F.pow(F.lit(2.0), F.col("id")).cast("bigint").alias("p"),
-    )
-    # integer division only: double division would shred 60-bit hashes
-    # (53-bit mantissa) and diverge from the oracle
-    contrib = tok_counts.crossJoin(F.broadcast(bits)).select(
-        "doc_id", "bit", "p",
-        (F.col("c") * (F.expr("(h DIV p) % 2") * 2 - 1)).alias("w"),
-    )
-    per_bit = contrib.groupBy("doc_id", "bit", "p").agg(F.sum("w").alias("s"))
-    return per_bit.groupBy("doc_id").agg(
-        F.sum(F.when(F.col("s") >= 0, F.col("p")).otherwise(F.lit(0))).alias("simhash")
-    )
+    over token counts, packed bucket id — operators.dedup.simhash at 16
+    bits (one shuffle; the oracle keeps its cross-join-per-bit encoding,
+    an equivalent spec: per-occurrence votes sum to count × vote)."""
+    return dedup.simhash(_t(spark, sf, "documents"), "text", "doc_id", bits=16)
 
 
 ORACLE_SIMHASH = f"""
@@ -796,21 +763,8 @@ def q_ngram_jaccard_pairs(spark, sf):
     """n-gram Jaccard near-dup: word-3-gram shingles, exact Jaccard ≥ 0.6
     over an inverted-index self-join (shingle-key join, not all-pairs)."""
     docs = _t(spark, sf, "documents").where(F.col("doc_id") < 150)
-    toks = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    sh = (
-        toks.select(
-            "doc_id",
-            F.concat_ws(
-                " ", "tok", F.lead("tok", 1).over(w), F.lead("tok", 2).over(w)
-            ).alias("shingle"),
-            F.lead("tok", 2).over(w).alias("guard"),
-        )
-        .where(F.col("guard").isNotNull())
-        .select("doc_id", "shingle")
-        .distinct()
+    sh = dedup.word_shingles(docs, "text", "doc_id").withColumnRenamed(
+        "_id", "doc_id"
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
@@ -863,21 +817,9 @@ WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 4) >= 0.6
 
 def q_doc_fingerprint(spark, sf):
     """Document fingerprint: min 60-bit hash over word-3-gram shingles
-    (1-perm minhash / winnowing-lite)."""
-    docs = _t(spark, sf, "documents")
-    toks = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    sh = toks.select(
-        "doc_id",
-        F.concat_ws(" ", "tok", F.lead("tok", 1).over(w), F.lead("tok", 2).over(w))
-        .alias("shingle"),
-        F.lead("tok", 2).over(w).alias("guard"),
-    ).where(F.col("guard").isNotNull())
-    return sh.groupBy("doc_id").agg(
-        F.min(_h60(F.col("shingle"))).alias("fingerprint")
-    )
+    (1-perm minhash / winnowing-lite) — operators.textstats
+    .shingle_fingerprint."""
+    return shingle_fingerprint(_t(spark, sf, "documents"), "text", "doc_id")
 
 
 ORACLE_FINGERPRINT = f"""
@@ -1359,73 +1301,74 @@ _load_ext()
 # Everything past slot 50 stays in the registry (local gate + pytest still
 # cover it) and rotates back in a later round.
 DRIVER_PRIORITY: list[str] = [
-    # ---- round-5 window ----
-    # tier 1 — stale or never-green (the tools/stale_greens.py set):
-    # outlink_frontier gained its admission gate in r4 AFTER its only
-    # (r3) green row; above_avg_orders_sql / grouping_sets_panel moved to
-    # query-scoped view names in r5; pages_gen_probe / ivf_nprobe_sweep
-    # are new in r5 (wave V)
-    "outlink_frontier",
-    "pages_gen_probe",
-    "ivf_nprobe_sweep",
-    "simhash_hot_bucket_split",
-    "error_context_outer",
+    # ---- round-6 window ----
+    # tier 1 — stale (the tools/stale_greens.py set): these queries now
+    # call the operator they used to copy (dedup.exact_dedup / simhash /
+    # word_shingles / _sign_bucket, textstats.shingle_fingerprint,
+    # similarity.dot), and minhash_lsh_recall became one lazy plan
+    "exact_dedup_keeper",
+    "doc_fingerprint",
+    "ngram_jaccard_pairs",
+    "simhash16",
+    "ann_topk_cosine",
+    "lsh_bucket_histogram",
     "minhash_lsh_recall",
-    "host_mix_shift",
-    "above_avg_orders_sql",
-    "grouping_sets_panel",
-    # tier 2 — r3 single-greens displaced from the r4 window; the three
-    # pages-derived entries lead because the fixture moved v2→v3 after
-    # their green row
-    "page_triage_native",
-    "dom_blocks_native",
-    "surt_prefix_scan",
-    "gopher_quality_flags",
-    "host_stats_salted",
-    "rare_token_fraction",
-    "test_set_decontamination",
-    "pii_scrub_docs",
-    "boilerplate_line_strip",
-    "token_shard_packing",
-    "quality_linear_score",
-    "domain_cap_sample",
-    "sentence_dedup_global",
-    "anchor_link_stats",
-    "extraction_yield_by_host",
-    "recrawl_priority",
-    "url_filter_gate",
-    "politeness_audit",
-    "ann_batch_topk",
-    "pdf_page_explode",
-    # tier 2b — remaining r3 single-greens (untouched since their green)
-    "doc_length_histogram",
-    "edit_distance_pairs",
-    "hll_portable",
-    "priority_revenue_share",
-    "props_redacted",
-    "stratified_sample",
-    "train_val_test_split",
-    # tier 2c — the oldest single-greens (r1/r2) — their only driver row
-    # is 3-4 rounds old
-    "customers_without_orders",
-    "sliding_hour_avg",
-    "user_running_value",
-    "user_segment_setops",
-    "doc_stats_panel",
-    "event_funnel",
-    "events_json_extract",
-    "file_size_format",
+    # tier 1b — fingerprint unmoved but a helper they run through
+    # changed (q_simhash16, q_ann_topk_cosine, IvfIndex / batch_topk /
+    # embedding_cosine_dups / search_topk now on similarity.dot); the
+    # tool only sees the query's own source, so these are hand-audited
+    "knn_hydrated",
+    "simhash_band_pairs",
+    "simhash_hot_bucket_split",
     "ivf_topk",
-    "lang_source_pivot",
-    "quality_score",
-    "user_sessions",
-    # tier 3 — headline anchors (bench queries + the entry() flagship):
-    # multi-green, kept in-window for cross-round continuity
-    "pages_extraction",
+    "ivf_recall_at_k",
+    "ivf_nprobe_sweep",
+    "embedding_near_dups",
+    "ann_batch_topk",
     "semantic_search",
+    # tier 2 — r4 single-greens displaced from the r5 window, registry
+    # order (the last 3 of them fall below the cut)
+    "hll_distinct_tokens",
+    "multimodal_image_features",
+    "latest_snapshot_per_url",
+    "url_canonical_dupes",
+    "bloom_url_seen",
+    "crawl_diff",
+    "robots_compliance",
+    "image_ocr_native",
+    "cms_heavy_hitters",
+    "intra_doc_repetition",
+    "tfidf_distinctive_terms",
+    "unigram_lm_doc_score",
+    "interval_overlap_join",
+    "weighted_sample",
+    "hits_hosts",
+    "length_quantile_sketch",
+    "dsir_importance_weights",
+    "rendezvous_shard_assign",
+    "pmi_bigrams",
+    "crawl_budget_allocation",
+    "scd2_url_history",
+    "source_mirror_detect",
+    "crawl_depth_bfs",
+    "partition_checksums",
+    "pit_snapshot_lookup",
+    "epoch_shuffle_assign",
+    "session_window_stats",
+    "cdc_chunk_dedup",
+    "etld1_registrable",
+    "host_triangle_count",
+    "trimmed_mean_length",
+    "morton_layout_keys",
+    "lang_id_confusion",
+    # tier 3 — the headline extraction anchor (multi-green); the other
+    # anchor, semantic_search, sits in tier 1b
+    "pages_extraction",
     # ---- below the 50-row cut: everything else ----
-    # r4 singles (verified last round) and multi-green anchors; local
-    # gate + pytest still cover all of them every session
+    # the remaining r4 singles (unpivot_doc_stats, outer_explode_audit,
+    # curation_funnel), the r5 singles (pages_gen_probe,
+    # error_context_outer, host_mix_shift) and the multi-green anchors;
+    # local gate + pytest still cover all of them every session
 ]
 
 

@@ -6417,8 +6417,9 @@ def q_simhash_hot_bucket_split(spark, sf):
     the split, and candidate pairs before/after. All aggregates — the
     pair sets are COUNTED via sum C(occ,2), never materialized, so the
     query is linear in the corpus and the oracle needs no doc_id cap.
-    At 10^12 docs the same shape runs on the 64-bit signature with 8-bit
-    bands and recursive extension for still-hot sub-buckets."""
+    The split is ONE level: a hot bucket's sub-buckets are reported as
+    they fall, and a sub-bucket still over _HSB_CAP is not split again
+    (max_occ_after shows how hot the hottest one stays)."""
     from .queries import q_simhash16
 
     sig = q_simhash16(spark, sf)
@@ -6584,7 +6585,8 @@ def q_minhash_lsh_recall(spark, sf):
     10^12 docs the truth set comes from a sampled slice exactly like
     this capped one. Scale shape: truth is an inverted-index self-join
     (token-key, never all-pairs); each config is one self-join on its
-    banding key; the eval joins are candidate-set-sized."""
+    banding key; the eval joins are candidate-set-sized. The whole
+    table is one lazy plan: no count runs until the caller's action."""
     from .queries import q_minhash_signatures
 
     docs = _t(spark, sf, "documents").where(F.col("doc_id") < _MLR_MAXDOC)
@@ -6638,22 +6640,24 @@ def q_minhash_lsh_recall(spark, sf):
         .distinct()
     )
 
-    n_truth = truth.count()
+    # a global aggregate emits exactly one row even over an empty input,
+    # so a config with no candidates still reports, with zero counts
+    hits = truth.withColumn("hit", F.lit(1))
 
     def eval_config(name, cand):
-        n_cand = cand.count()
-        n_hit = cand.join(truth, ["da", "db"]).count()
-        return (name, n_truth, n_cand, n_hit)
+        return cand.join(hits, ["da", "db"], "left").agg(
+            F.lit(name).alias("config"),
+            F.count("*").alias("n_cand"),
+            F.count("hit").alias("n_hit"),
+        )
 
-    rows = [eval_config("and4", cand_and), eval_config("or4", cand_or)]
-    out = spark.createDataFrame(
-        rows, "config string, n_truth long, n_cand long, n_hit long"
+    out = (
+        eval_config("and4", cand_and)
+        .unionByName(eval_config("or4", cand_or))
+        .crossJoin(truth.agg(F.count("*").alias("n_truth")))
     )
     return out.select(
-        "config",
-        F.col("n_truth").cast("bigint").alias("n_truth"),
-        F.col("n_cand").cast("bigint").alias("n_cand"),
-        F.col("n_hit").cast("bigint").alias("n_hit"),
+        "config", "n_truth", "n_cand", "n_hit",
         F.expr("n_hit * 10000 div nullif(n_truth, 0)").cast("bigint")
         .alias("recall_bp"),
         F.expr("n_hit * 10000 div nullif(n_cand, 0)").cast("bigint")

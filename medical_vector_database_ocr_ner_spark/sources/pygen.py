@@ -76,6 +76,11 @@ class PagesGenReader(DataSourceReader):
         self.n = int(options.get("n", 1000))
         self.seed = int(options.get("seed", 42))
         self.num_partitions = int(options.get("numPartitions", 8))
+        if self.num_partitions <= 0:
+            raise ValueError(
+                f"pages_gen option numPartitions must be >= 1, "
+                f"got {self.num_partitions}"
+            )
 
     def partitions(self):
         if self.n <= 0:

@@ -289,6 +289,40 @@ class TestRealCodecBranch:
         assert rej["width"] is None
         assert "undecodable" in rej["error"]
 
+    def test_fake_pil_shadows_then_restores_installed_pil(self):
+        """The fake must win even where a PIL is already importable, and
+        hand the runtime its own modules back after each call."""
+        import struct
+        import sys
+        import types
+
+        def _refuse(fp):
+            raise OSError("installed PIL reached")
+
+        real_image = types.ModuleType("PIL.Image")
+        real_image.open = _refuse
+        real = types.ModuleType("PIL")
+        real.Image = real_image
+        names = ("PIL", "PIL.Image")
+        saved = {n: sys.modules.get(n) for n in names}
+        sys.modules.update({"PIL": real, "PIL.Image": real_image})
+        try:
+            decode = self._factory()()
+            got = decode(b"REAL" + struct.pack("<III", 7, 5, 4))
+            assert got == {"width": 7, "height": 5, "channels": 4}
+            assert sys.modules["PIL"] is real
+            assert sys.modules["PIL.Image"] is real_image
+            for n in names:
+                sys.modules.pop(n)
+            decode(b"REAL" + struct.pack("<III", 1, 1, 1))
+            assert not any(n in sys.modules for n in names)
+        finally:
+            for n, mod in saved.items():
+                if mod is None:
+                    sys.modules.pop(n, None)
+                else:
+                    sys.modules[n] = mod
+
     def test_plan_shape_invariant_under_decoder_swap(self, spark):
         """Swapping the codec must not change the physical plan — the
         seam is a worker-side function pointer, not a plan rewrite."""

@@ -23,6 +23,9 @@ SAMPLE = [
     "minhash_signatures",
     "simhash16",
     "doc_fingerprint",
+    "ngram_jaccard_pairs",
+    "lsh_bucket_histogram",
+    "minhash_lsh_recall",
     "quality_score",
     "union_dedup_priority",
     "user_sessions",

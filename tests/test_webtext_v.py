@@ -66,6 +66,25 @@ class TestPagesGenProbe:
         ]
         assert df.count() == 0
 
+    @pytest.mark.parametrize("n_parts", [0, -2])
+    def test_non_positive_num_partitions_names_the_option(self, spark,
+                                                          n_parts):
+        """numPartitions <= 0 used to surface as a ZeroDivisionError from
+        the ceil-div in partitions(); it must be a ValueError that names
+        the option."""
+        from medical_vector_database_ocr_ner_spark.sources.pygen import (
+            register,
+        )
+
+        register(spark)
+        df = (
+            spark.read.format("pages_gen")
+            .option("n", 10).option("numPartitions", n_parts).load()
+        )
+        with pytest.raises(Exception, match="numPartitions") as info:
+            df.count()
+        assert "ValueError" in str(info.value)
+
 
 class TestIvfNprobeSweep:
     def test_recall_monotone_and_complete_at_full_probe(self, spark,
@@ -445,6 +464,73 @@ class TestWaveX:
         for r in (a, o):
             assert r["n_hit"] <= r["n_truth"]
             assert r["n_cand"] is None or r["n_hit"] <= r["n_cand"]
+
+    @staticmethod
+    def _scans_up_front(spark, monkeypatch, documents=None):
+        """Resolve every table the registry reads BEFORE the measured
+        block: spark.read.parquet infers the schema with a Spark job of
+        its own, which is not the query's doing."""
+        from medical_vector_database_ocr_ner_spark.plans import (
+            queries,
+            queries_ext,
+        )
+
+        read = queries._t
+        cache = {}
+
+        def cached(spark_, sf, name):
+            if name == "documents" and documents is not None:
+                return documents
+            if (sf, name) not in cache:
+                cache[(sf, name)] = read(spark_, sf, name)
+            return cache[(sf, name)]
+
+        monkeypatch.setattr(queries, "_t", cached)
+        monkeypatch.setattr(queries_ext, "_t", cached)
+        return cached
+
+    def test_lsh_recall_builds_without_a_job(self, spark, sf001_dir,
+                                            monkeypatch):
+        """minhash_lsh_recall is one lazy plan: building it launches no
+        Spark job (it used to run five driver-side counts and rebuild
+        the table with createDataFrame)."""
+        from medical_vector_database_ocr_ner_spark.plans.queries_ext import (
+            q_minhash_lsh_recall,
+        )
+
+        cached = self._scans_up_front(spark, monkeypatch)
+        cached(spark, sf001_dir, "documents")
+        sc = spark.sparkContext
+        group = "lazy-minhash-lsh-recall"
+        sc.setJobGroup(group, "plan build only")
+        try:
+            df = q_minhash_lsh_recall(spark, sf001_dir)
+            launched = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert launched == []
+        assert {r["config"] for r in df.collect()} == {"and4", "or4"}
+
+    def test_lsh_recall_reports_empty_candidate_sets(self, spark,
+                                                     monkeypatch):
+        """With no near-duplicate pairs both configs still report, with
+        zero counts and null ratios where the denominator is zero."""
+        from medical_vector_database_ocr_ner_spark.plans.queries_ext import (
+            q_minhash_lsh_recall,
+        )
+
+        docs = spark.createDataFrame(
+            [(1, "alpha beta gamma"), (2, "delta epsilon zeta")],
+            "doc_id bigint, text string",
+        )
+        self._scans_up_front(spark, monkeypatch, documents=docs)
+        rows = {r["config"]: r.asDict()
+                for r in q_minhash_lsh_recall(spark, "unused").collect()}
+        assert set(rows) == {"and4", "or4"}
+        for r in rows.values():
+            assert (r["n_truth"], r["n_cand"], r["n_hit"]) == (0, 0, 0)
+            assert r["recall_bp"] is None and r["precision_bp"] is None
 
     def test_host_mix_shift_arithmetic(self, spark, sf001_dir):
         from medical_vector_database_ocr_ner_spark.plans.queries_ext import (
