@@ -11,16 +11,26 @@ analogous stage is boilerplate removal. Design (stdlib-only, deterministic):
 3. Main content = newline-join of blocks classified as content, each block's
    text whitespace-collapsed; control chars stripped per
    reference app/models/document.py:177-188.
+
+Step 1 is one flat loop over a tokenizer, not an ``HTMLParser`` subclass.
+Python's ``html.parser`` stays the specification: ``_tokens`` yields the
+exact start-tag, end-tag and data events that ``HTMLParser(
+convert_charrefs=True)`` would report over ``feed(); close()``. Plain tags
+(quoted or bare attributes, ``/>``, ``</name>``) are matched by one regex;
+everything else at a ``<`` (comments, declarations, processing
+instructions, unquoted or odd attributes, script/style CDATA content,
+incomplete markup) is handed to html.parser's own ``parse_*`` methods on
+the same buffer. The loop keeps counters (skip, link and boilerplate
+depth) instead of scanning the open-tag stack per text node, so a text
+node costs O(1) at any nesting depth.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 from html import unescape
-from html.parser import HTMLParser
+from html.parser import HTMLParser, starttagopen as _STARTTAG_OPEN
 import re
-
-_WS_RE = re.compile(r"\s+")
 
 # elements whose text is never content
 _SKIP_TAGS = frozenset({"script", "style", "noscript", "template", "svg", "head"})
@@ -63,94 +73,195 @@ class Block:
         )
 
 
-class _BlockParser(HTMLParser):
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.stack: list[str] = []
-        self.blocks: list[Block] = []
-        self._parts: list[str] = []
-        self._link_chars = 0
-        self._skip_depth = 0
-        self._link_depth = 0
-        self._block_path: str = ""
-        self._block_depth: int = 0
-        self._boiler = False  # any accumulated text seen under a boiler tag
+# Plain tags: a start tag with bare or quoted attributes
+# (`<name a="v" b='w' c>`, or ending `/>`) or an end tag (`</name>`), with
+# whitespace limited to the characters that end an html.parser tag name.
+# For every string this matches, html.parser reports the same tag name and
+# end offset.
+_PLAIN_TAG_RE = re.compile(
+    r"<(?:([a-zA-Z][-.:_a-zA-Z0-9]*)"  # 1: start-tag name
+    r"(?:[ \t\n\r\f]+[^\s\"'<>/=\x00]+"  # attribute name
+    r"(?:[ \t\n\r\f]*=[ \t\n\r\f]*(?:\"[^\"]*\"|'[^']*'))?)*"  # value
+    r"[ \t\n\r\f]*(/?)>"  # 2: self-closing slash
+    r"|/([a-zA-Z][-.:_a-zA-Z0-9]*)[ \t\n\r\f]*>)"  # 3: end-tag name
+)
 
-    def _flush(self) -> None:
-        raw = "".join(self._parts)
-        text = _WS_RE.sub(" ", raw).strip()
-        if text:
-            self.blocks.append(
-                Block(
-                    tag_path=self._block_path,
-                    depth=self._block_depth,
-                    text=text,
-                    n_chars=len(text),
-                    n_link_chars=min(self._link_chars, len(text)),
-                    n_words=len(text.split()),
-                    in_boilerplate=self._boiler,
-                )
-            )
-        self._parts = []
-        self._link_chars = 0
-        self._boiler = False
+_START, _END, _DATA = 0, 1, 2
+
+
+class _Markup(HTMLParser):
+    """html.parser over a fixed buffer whose handlers queue the tag and data
+    events for the tokenizer instead of acting on them."""
+
+    def __init__(self, html: str) -> None:
+        super().__init__(convert_charrefs=True)
+        self.rawdata = html
+        self.events: list[tuple[int, str]] = []
 
     def handle_starttag(self, tag: str, attrs) -> None:
-        if tag in _SKIP_TAGS:
-            self._skip_depth += 1
-        if tag == "a":
-            self._link_depth += 1
-        if tag in _BLOCK_TAGS:
-            self._flush()
-        self.stack.append(tag)
-        if tag in _BLOCK_TAGS:
-            self._block_path = "/".join(self.stack)
-            self._block_depth = len(self.stack)
+        self.events.append((_START, tag))
 
     def handle_endtag(self, tag: str) -> None:
-        if tag in _BLOCK_TAGS:
-            self._flush()
-        if tag in _SKIP_TAGS and self._skip_depth > 0:
-            self._skip_depth -= 1
-        if tag == "a" and self._link_depth > 0:
-            self._link_depth -= 1
-        # pop to the matching open tag if present (tolerates bad nesting)
-        if tag in self.stack:
-            while self.stack and self.stack[-1] != tag:
-                self.stack.pop()
-            if self.stack:
-                self.stack.pop()
+        self.events.append((_END, tag))
 
     def handle_data(self, data: str) -> None:
-        if self._skip_depth == 0 and data:
-            self._parts.append(data)
-            if self._link_depth > 0:
-                self._link_chars += len(_WS_RE.sub(" ", data).strip())
-            if data.strip() and any(t in _BOILER_TAGS for t in self.stack):
-                self._boiler = True
+        self.events.append((_DATA, data))
 
-    def close(self) -> None:  # flush trailing text
-        super().close()
-        self._flush()
+
+def _tokens(html: str):
+    """Yield the (kind, value) events ``HTMLParser(convert_charrefs=True)``
+    reports for ``feed(html); close()``: lower-cased start and end tag names
+    (a self-closing tag yields both) and data chunks, split where
+    html.parser splits them. html.parser's exceptions propagate."""
+    p = _Markup(html)
+    events = p.events
+    n = len(html)
+    find = html.find
+    startswith = html.startswith
+    plain_tag = _PLAIN_TAG_RE.match
+    i = 0
+    while i < n:
+        if p.cdata_elem is None:
+            j = find("<", i)
+            if j < 0:
+                yield _DATA, unescape(html[i:])
+                return
+            if i < j:
+                text = html[i:j]
+                yield _DATA, unescape(text) if "&" in text else text
+            m = plain_tag(html, j)
+            if m is not None:
+                tag = m[1]
+                if tag is None:
+                    yield _END, m[3].lower()
+                else:
+                    tag = tag.lower()
+                    yield _START, tag
+                    if m[2]:
+                        yield _END, tag
+                    elif tag in p.CDATA_CONTENT_ELEMENTS:
+                        p.set_cdata_mode(tag)
+                i = m.end()
+                continue
+        else:
+            m = p.interesting.search(html, i)
+            if m is None:  # unclosed script/style: the rest is dropped
+                return
+            j = m.start()
+            if i < j:
+                yield _DATA, html[i:j]
+        # not a plain tag: the branches of HTMLParser.goahead, in its order
+        if _STARTTAG_OPEN.match(html, j):
+            k = p.parse_starttag(j)
+        elif startswith("</", j):
+            k = p.parse_endtag(j)
+        elif startswith("<!--", j):
+            k = p.parse_comment(j)
+        elif startswith("<?", j):
+            k = p.parse_pi(j)
+        elif startswith("<!", j):
+            k = p.parse_html_declaration(j)
+        elif j + 1 < n:
+            events.append((_DATA, "<"))
+            k = j + 1
+        else:
+            yield _DATA, "<"
+            return
+        if k < 0:  # unterminated at end of input: the markup becomes text
+            # (never in CDATA mode, where j is at a complete end tag)
+            k = find(">", j + 1)
+            if k < 0:
+                k = find("<", j + 1)
+                if k < 0:
+                    k = j + 1
+            else:
+                k += 1
+            events.append((_DATA, unescape(html[j:k])))
+        yield from events
+        events.clear()
+        i = k
+
+
+def _block(parts: list[str], link_chars: int, path: str, depth: int,
+           boiler: bool) -> Block | None:
+    words = "".join(parts).split()
+    if not words:
+        return None
+    text = " ".join(words)
+    return Block(
+        tag_path=path,
+        depth=depth,
+        text=text,
+        n_chars=len(text),
+        n_link_chars=min(link_chars, len(text)),
+        n_words=len(words),
+        in_boilerplate=boiler,
+    )
 
 
 def html_blocks(html: bytes | str) -> list[Block]:
     """Flatten HTML into the classified block array (the DOM analog of the
-    reference's per-page OCR array, ocr_service.py:89-122)."""
+    reference's per-page OCR array, ocr_service.py:89-122). If html.parser
+    raises on the input, the blocks completed so far are returned and the
+    open block's text is dropped."""
     if isinstance(html, bytes):
         html = html.decode("utf-8", errors="replace")
-    parser = _BlockParser()
+    blocks: list[Block] = []
+    stack: list[str] = []  # open tags
+    parts: list[str] = []  # text of the open block
+    link_chars = 0
+    boiler = False  # the open block has text under a boilerplate tag
+    skip_depth = link_depth = boiler_depth = 0
+    path, depth = "", 0
     try:
-        parser.feed(unescape_safe(html))
-        parser.close()
+        for kind, value in _tokens(html):
+            if kind == _DATA:
+                if skip_depth == 0 and value:
+                    parts.append(value)
+                    if link_depth:
+                        link_chars += len(" ".join(value.split()))
+                    if boiler_depth and value.strip():
+                        boiler = True
+                continue
+            if parts and value in _BLOCK_TAGS:
+                block = _block(parts, link_chars, path, depth, boiler)
+                if block is not None:
+                    blocks.append(block)
+                parts = []
+                link_chars = 0
+                boiler = False
+            if kind == _START:
+                if value in _SKIP_TAGS:
+                    skip_depth += 1
+                elif value == "a":
+                    link_depth += 1
+                stack.append(value)
+                if value in _BLOCK_TAGS:
+                    if value in _BOILER_TAGS:
+                        boiler_depth += 1
+                    path = "/".join(stack)
+                    depth = len(stack)
+            else:
+                if value in _SKIP_TAGS:
+                    if skip_depth:
+                        skip_depth -= 1
+                elif value == "a" and link_depth:
+                    link_depth -= 1
+                # pop to the matching open tag if present (tolerates bad
+                # nesting)
+                if value in stack:
+                    while True:
+                        top = stack.pop()
+                        if top in _BOILER_TAGS:
+                            boiler_depth -= 1
+                        if top == value:
+                            break
     except Exception:
-        pass
-    return parser.blocks
-
-
-def unescape_safe(html: str) -> str:
-    # convert_charrefs already handles entities in data; leave markup as-is
-    return html
+        return blocks
+    block = _block(parts, link_chars, path, depth, boiler)
+    if block is not None:
+        blocks.append(block)
+    return blocks
 
 
 # strip set per reference app/models/document.py:177-188

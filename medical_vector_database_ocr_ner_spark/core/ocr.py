@@ -22,6 +22,7 @@ is identical either way.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 PDF_MAGIC = b"%PDF-1.7\n%synthetic\n"
@@ -34,8 +35,12 @@ def fake_pdf_bytes(pages: list[str]) -> bytes:
     return PDF_MAGIC + body + b"\n%%EOF"
 
 
+@functools.lru_cache(maxsize=1 << 16)
 def word_confidence(word: str) -> int:
-    """Stable per-word confidence in [-1, 99] (tesseract conf analog)."""
+    """Stable per-word confidence in [-1, 99] (tesseract conf analog).
+    Memoised per worker process: a crawl's vocabulary is small next to its
+    word count, and the bounded cache keeps a hostile vocabulary from
+    growing memory."""
     digest = hashlib.blake2b(word.encode("utf-8"), digest_size=4).digest()
     return int.from_bytes(digest, "big") % 101 - 1
 

@@ -1326,6 +1326,9 @@ DRIVER_PRIORITY: list[str] = [
     "embedding_near_dups",
     "ann_batch_topk",
     "semantic_search",
+    # pages_extraction: extract_documents now runs the one-pass tokenizer
+    # in core.html_extract and the memoised word_confidence in core.ocr
+    "pages_extraction",
     # tier 2 — r4 single-greens displaced from the r5 window, registry
     # order (the last 3 of them fall below the cut)
     "hll_distinct_tokens",
@@ -1361,9 +1364,8 @@ DRIVER_PRIORITY: list[str] = [
     "trimmed_mean_length",
     "morton_layout_keys",
     "lang_id_confusion",
-    # tier 3 — the headline extraction anchor (multi-green); the other
-    # anchor, semantic_search, sits in tier 1b
-    "pages_extraction",
+    # tier 3 — empty this round: both headline anchors (pages_extraction,
+    # semantic_search) sit in tier 1b
     # ---- below the 50-row cut: everything else ----
     # the remaining r4 singles (unpivot_doc_stats, outer_explode_audit,
     # curation_funnel), the r5 singles (pages_gen_probe,

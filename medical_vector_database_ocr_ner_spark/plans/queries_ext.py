@@ -3634,8 +3634,8 @@ EXT_QUERIES.update(WEB_QUERIES_G)
 # The fixture's v3 scanned-page images (PNG magic + marker + utf-8 OCR
 # text) go through the UDF OCR branch for byte-parity (golden suite); this
 # NATIVE twin cross-checks the image corpus itself engine-to-engine — the
-# same native-vs-UDF two-tier story as dom_blocks_native vs the HTMLParser
-# path.
+# same native-vs-UDF two-tier story as dom_blocks_native vs the Python
+# html_blocks path.
 
 def q_image_ocr_native(spark, sf):
     """Per-host stats of the scanned-image corpus with ZERO Python: image

@@ -422,6 +422,9 @@ class TestStaleGreensRecord:
         cpath.write_text(json.dumps(correctness))
         rpath = tmp_path / "green_hashes.json"
         monkeypatch.setattr(sg, "RECORD_PATH", str(rpath))
+        # the dirty-tree refusal has its own tests below; this one is
+        # about the record itself, whatever state the checkout is in
+        monkeypatch.setattr(sg, "dirty_paths", lambda root=sg.REPO_ROOT: [])
 
         sg.cmd_record(99, str(cpath))
         rec = json.loads(rpath.read_text())
@@ -435,6 +438,62 @@ class TestStaleGreensRecord:
                  if n in json.loads(rpath.read_text())
                  and json.loads(rpath.read_text())[n]["hash"] != fps[n]}
         assert stale == {names[0]}
+
+
+    def test_record_refuses_a_dirty_tree(self, tmp_path, monkeypatch):
+        """A fingerprint taken while the package, tools/ or tests/ hold
+        uncommitted edits would mark unverified code green: record must
+        refuse, name the dirty paths and leave the record untouched."""
+        import sys
+
+        import pytest
+
+        sys.path.insert(0, ".")
+        from tools import stale_greens as sg
+
+        rpath = tmp_path / "green_hashes.json"
+        rpath.write_text("{}")
+        monkeypatch.setattr(sg, "RECORD_PATH", str(rpath))
+        monkeypatch.setattr(sg, "dirty_paths",
+                            lambda root=sg.REPO_ROOT: ["tests/test_x.py"])
+        with pytest.raises(SystemExit, match="tests/test_x.py"):
+            sg.cmd_record(99, str(tmp_path / "unread.json"))
+        assert rpath.read_text() == "{}"
+
+    def test_dirty_paths_sees_only_the_guarded_trees(self, tmp_path):
+        """Edits and untracked files under the package, tools/ or tests/
+        count as dirty; edits elsewhere and to the record itself do not."""
+        import subprocess
+        import sys
+
+        sys.path.insert(0, ".")
+        from tools import stale_greens as sg
+
+        def git(*args):
+            subprocess.run(
+                ["git", "-c", "user.name=t", "-c", "user.email=t@example.org",
+                 "-c", "commit.gpgsign=false", *args],
+                cwd=tmp_path, check=True, capture_output=True,
+            )
+
+        files = ["README.md", "tools/green_hashes.json", "tools/t.py",
+                 "tests/test_t.py", *(f"{d}/m.py" for d in sg.GUARDED_DIRS)]
+        for f in files:
+            (tmp_path / f).parent.mkdir(parents=True, exist_ok=True)
+            (tmp_path / f).write_text("x = 1\n")
+        git("init", "-q")
+        git("add", "-A")
+        git("commit", "-q", "-m", "seed")
+        assert sg.dirty_paths(str(tmp_path)) == []
+
+        (tmp_path / "README.md").write_text("edited\n")
+        (tmp_path / "tools/green_hashes.json").write_text("{}\n")
+        assert sg.dirty_paths(str(tmp_path)) == []
+
+        (tmp_path / "tests/test_t.py").write_text("x = 2\n")
+        (tmp_path / "medical_vector_database_ocr_ner_spark/new.py").write_text("")
+        assert sorted(sg.dirty_paths(str(tmp_path))) == [
+            "medical_vector_database_ocr_ner_spark/new.py", "tests/test_t.py"]
 
 
 class TestWaveX:

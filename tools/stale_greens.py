@@ -11,6 +11,9 @@ plans/queries.py. This tool makes it computed, not remembered:
   (sha256 of the query function's source ⊕ its oracle SQL) plus the
   round number in tools/green_hashes.json. Run it at round close, while
   the working tree IS the code the driver verified.
+  It refuses to run while the package, tools/ or tests/ hold uncommitted
+  changes (the record file itself aside): a fingerprint taken from an
+  edited tree would record as green code that no correctness run saw.
 - ``check``: compare every registry entry's current fingerprint against
   the record. Prints three sets — NEVER-GREEN (no record), STALE
   (fingerprint drifted since the recorded green), FRESH — and exits 1
@@ -34,12 +37,17 @@ import hashlib
 import inspect
 import json
 import os
+import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
-RECORD_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "green_hashes.json")
+RECORD_PATH = os.path.join(REPO_ROOT, "tools", "green_hashes.json")
+
+# the trees a recorded fingerprint must match: query code, this tool and
+# the tests that check the stale set
+GUARDED_DIRS = ("medical_vector_database_ocr_ner_spark", "tools", "tests")
 
 
 def _semantic_source(fn) -> str:
@@ -88,7 +96,25 @@ def load_record() -> dict:
         return json.load(f)
 
 
+def dirty_paths(root: str = REPO_ROOT) -> list[str]:
+    """Modified, staged or untracked files under GUARDED_DIRS of the git
+    checkout at ``root``, except the green record itself."""
+    out = subprocess.run(
+        ["git", "status", "--porcelain", "--untracked-files=all", "--",
+         *GUARDED_DIRS],
+        cwd=root, capture_output=True, text=True, check=True,
+    ).stdout
+    return [line[3:] for line in out.splitlines()
+            if line[3:] != "tools/green_hashes.json"]
+
+
 def cmd_record(round_no: int, correctness_path: str | None = None) -> None:
+    dirty = dirty_paths()
+    if dirty:
+        raise SystemExit(
+            "refusing to record green fingerprints from a dirty tree; "
+            "commit or stash first: " + ", ".join(dirty)
+        )
     path = correctness_path or os.path.join(
         os.path.dirname(RECORD_PATH), os.pardir,
         f"CORRECTNESS_r{round_no:02d}.json",
