@@ -3,7 +3,5 @@ from .extraction import (
     ENTITY_TYPE,
     extract_documents,
     ner_udf,
-    embed_udf,
-    clean_text_udf,
     pdf_pages_udf,
 )

@@ -253,7 +253,7 @@ def embedding_cosine_dups(
     def _score(pairs: "DataFrame") -> "DataFrame":
         return (
             pairs.where(F.col("id_a") < F.col("id_b"))
-            .withColumn("cosine", F.round(dot(F.col("va"), F.col("vb")), 6))
+            .withColumn("cosine", F.round(dot("va", "vb"), 6))
             .where(F.col("cosine") >= threshold)
             .select("id_a", "id_b", "cosine")
         )

@@ -178,17 +178,8 @@ def make_embed_udf(seam=None):
     return pandas_udf(ArrayType(FloatType()))(_embed)
 
 
-# default-seam column UDFs (kept for existing callers/tests)
+# default-seam NER column UDF, re-exported by the operators package
 ner_udf = make_ner_udf()
-embed_udf = make_embed_udf()
-
-
-@pandas_udf(StringType())
-def clean_text_udf(texts: pd.Series) -> pd.Series:
-    """C1 order-exact clean (NFKC step has no Spark builtin → UDF, X6)."""
-    from ..core import clean_text
-
-    return texts.map(lambda t: clean_text(t) if t is not None else None)
 
 
 @pandas_udf(ArrayType(PAGE_TYPE))

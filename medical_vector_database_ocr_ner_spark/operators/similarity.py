@@ -19,28 +19,44 @@ if TYPE_CHECKING:
     from pyspark.sql import Column, DataFrame
 
 
-def dot(a, b) -> "Column":
-    """JVM-side dot product of two array columns: both sides cast to
-    double, summed as a left fold from 0.0 (aggregate over zip_with).
+def dot_sql(a: str, b: str) -> str:
+    """The SQL text of ``dot``; ``a`` and ``b`` are SQL array expressions."""
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
+            "CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)")
+
+
+def vec_sql(q: list[float]) -> str:
+    """A literal vector as ONE string literal cast to ``ARRAY<DOUBLE>``
+    (``[]`` is an empty array: ``split('', ',')`` would be ``['']``)."""
+    if not len(q):
+        return "CAST(array() AS ARRAY<DOUBLE>)"
+    body = ",".join(repr(float(x)) for x in q)
+    return f"CAST(split('{body}', ',') AS ARRAY<DOUBLE>)"
+
+
+def dot(a: str, b: str) -> "Column":
+    """JVM-side dot product of two SQL array expressions (column names, a
+    lambda field such as ``c.cvec``, a ``vec_sql`` literal), parsed once
+    by ``F.expr``: both sides cast to double, summed as a left fold from
+    0.0D over zip_with, which pads with nulls, so unequal lengths score null.
 
     The one definition every vector score in the package uses. The left
     fold matches the DuckDB oracles' sequential list_reduce bit-for-bit,
-    which a pairwise/SIMD summation would not. Measured against the alternatives at 20k rows × 384 dims (round
-    3): a flat 384-term ``vec[i] * q_i`` add chain overflows the driver
-    stack when built as Column nodes, and even SQL-parsed it runs 3×
-    SLOWER (the oversized expression kicks the Project out of whole-stage
-    codegen into an interpreted fallback that is worse than the HOF
-    machinery)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    which a pairwise/SIMD summation would not. A literal vector is ONE
+    string literal of exact ``repr(float)`` values that ConstantFolding
+    turns back into a literal array: the Column-lambda form cost ~130 ms
+    of py4j round trips per 384-dim vector, and ``array(<repr>D, ...)``
+    ~38 ms of parsing. Round 3, at 20k rows × 384 dims: a flat 384-term
+    ``vec[i] * q_i`` add chain overflows the driver stack as Column nodes,
+    and even SQL-parsed it runs 3× SLOWER (the oversized expression kicks
+    the Project out of whole-stage codegen into an interpreted fallback
+    that is worse than the HOF machinery)."""
+    return F.expr(dot_sql(a, b))
 
 
-def dot_lit(vec_col, query_vec: list[float]) -> "Column":
-    """``dot`` against a literal query vector."""
-    return dot(vec_col, F.array(*[F.lit(float(x)) for x in query_vec]))
+def dot_lit(vec_col: str, query_vec: list[float]) -> "Column":
+    """``dot`` of a vector column against a literal query vector."""
+    return dot(vec_col, vec_sql(query_vec))
 
 
 def brute_force_topk(
@@ -49,7 +65,7 @@ def brute_force_topk(
 ) -> "DataFrame":
     """Exact top-k: distributed TakeOrderedAndProject, no global sort."""
     return (
-        emb.select(F.col(id_col), dot_lit(F.col(vec_col), query_vec).alias("similarity"))
+        emb.select(F.col(id_col), dot_lit(vec_col, query_vec).alias("similarity"))
         .orderBy(F.desc("similarity"), F.asc(id_col))
         .limit(k)
     )
@@ -86,7 +102,7 @@ def batch_topk(
         F.col(query_id_col),
         F.col(id_col),
         F.spark_partition_id().alias("_pid"),
-        F.round(dot(F.col(vec_col), F.col(query_vec_col)), 6).alias("similarity"),
+        F.round(dot(vec_col, query_vec_col), 6).alias("similarity"),
     )
     order = [F.desc("similarity"), F.asc(id_col)]
     w_pre = Window.partitionBy(query_id_col, "_pid").orderBy(*order)
@@ -200,16 +216,11 @@ class IvfIndex:
         transform+array_max picks the best centroid (ties → lowest cid,
         matching the previous sequential-fold semantics). No shuffle; one
         pass; scales to any n_centroids × dim."""
-        cent_df = self._centroid_df(emb.sparkSession)
-        joined = emb.join(F.broadcast(cent_df))
-        scored = F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                dot(F.col(self.vec_col), c["cvec"]).alias("score"),
-                (-c["cid"]).alias("ncid"),
-            ),
+        joined = emb.join(F.broadcast(self._centroid_df(emb.sparkSession)))
+        best = F.expr(
+            "array_max(transform(cents, c -> named_struct("
+            f"'score', {dot_sql(self.vec_col, 'c.cvec')}, 'ncid', -c.cid)))"
         )
-        best = F.array_max(scored)
         return joined.select(
             self.id_col, self.vec_col,
             (-best["ncid"]).alias("centroid_id"),
@@ -242,7 +253,7 @@ class IvfIndex:
         return (
             candidates.select(
                 self.id_col,
-                dot_lit(F.col(self.vec_col), query_vec).alias("similarity"),
+                dot_lit(self.vec_col, query_vec).alias("similarity"),
             )
             .orderBy(F.desc("similarity"), F.asc(self.id_col))
             .limit(k)

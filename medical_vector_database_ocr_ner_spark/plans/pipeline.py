@@ -96,7 +96,7 @@ def search_topk(
     qvec = [float(x) for x in embed_text(query_text)]
     scored = embeddings.select(
         "vec_id",
-        dot_lit(F.col("embedding"), qvec).alias("similarity"),
+        dot_lit("embedding", qvec).alias("similarity"),
         *[F.col(c) for c in (extra_cols or [])],
     )
     topk = scored.orderBy(F.desc("similarity"), F.asc("vec_id")).limit(k)

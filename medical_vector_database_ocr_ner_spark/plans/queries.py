@@ -587,7 +587,7 @@ def q_ann_topk_cosine(spark, sf):
     (broadcast one-row query side; distributed TakeOrderedAndProject)."""
     emb = _t(spark, sf, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    sim = F.round(dot(F.col("embedding"), F.col("qe")), 4)
+    sim = F.round(dot("embedding", "qe"), 4)
     return (
         emb.crossJoin(F.broadcast(q))
         .select("vec_id", sim.alias("sim"))
@@ -1314,8 +1314,8 @@ DRIVER_PRIORITY: list[str] = [
     "lsh_bucket_histogram",
     "minhash_lsh_recall",
     # tier 1b — fingerprint unmoved but a helper they run through
-    # changed (q_simhash16, q_ann_topk_cosine, IvfIndex / batch_topk /
-    # embedding_cosine_dups / search_topk now on similarity.dot); the
+    # changed (q_simhash16; IvfIndex / batch_topk / embedding_cosine_dups
+    # / search_topk on similarity.dot, now SQL-rendered from dot_sql); the
     # tool only sees the query's own source, so these are hand-audited
     "knn_hydrated",
     "simhash_band_pairs",
