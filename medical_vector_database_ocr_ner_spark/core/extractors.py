@@ -45,16 +45,20 @@ NUMBER_PATTERNS: list[tuple[str, str]] = [
 ]
 
 # --- date families (reference text_utils.py:207-213) -----------------------
+# The reference's patterns, rewritten to match the same spans faster (see
+# core/ner.py): a leading ``\b\d`` is ``\d(?<!\w\d)`` with the first
+# quantifier reduced by one, so ``re`` can skip to a digit in C, and the
+# month alternation is trie-factored (no month is a prefix of another).
 _MONTHS = (
-    "january|february|march|april|may|june|july|august|september|october"
-    "|november|december"
+    "a(?:pril|ugust)|december|february|j(?:anuary|u(?:ly|ne))|ma(?:rch|y)"
+    "|november|october|september"
 )
 DATE_PATTERNS: list[tuple[str, str]] = [
-    (r"\b(\d{1,2})/(\d{1,2})/(\d{2,4})\b", "MM/DD/YYYY"),
-    (r"\b(\d{1,2})-(\d{1,2})-(\d{2,4})\b", "MM-DD-YYYY"),
-    (r"\b(\d{4})-(\d{1,2})-(\d{1,2})\b", "YYYY-MM-DD"),
+    (r"(\d(?<!\w\d)\d?)/(\d{1,2})/(\d{2,4})\b", "MM/DD/YYYY"),
+    (r"(\d(?<!\w\d)\d?)-(\d{1,2})-(\d{2,4})\b", "MM-DD-YYYY"),
+    (r"(\d(?<!\w\d)\d{3})-(\d{1,2})-(\d{1,2})\b", "YYYY-MM-DD"),
     (r"\b(" + _MONTHS + r")\s+(\d{1,2}),?\s+(\d{4})\b", "Month DD, YYYY"),
-    (r"\b(\d{1,2})\s+(" + _MONTHS + r")\s+(\d{4})\b", "DD Month YYYY"),
+    (r"(\d(?<!\w\d)\d?)\s+(" + _MONTHS + r")\s+(\d{4})\b", "DD Month YYYY"),
 ]
 
 EMAIL_PATTERN = r"\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b"

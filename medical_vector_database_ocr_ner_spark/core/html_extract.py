@@ -22,7 +22,10 @@ instructions, unquoted or odd attributes, script/style CDATA content,
 incomplete markup) is handed to html.parser's own ``parse_*`` methods on
 the same buffer. The loop keeps counters (skip, link and boilerplate
 depth) instead of scanning the open-tag stack per text node, so a text
-node costs O(1) at any nesting depth.
+node costs O(1) at any nesting depth. Block starts and end tags cost O(1)
+too (see ``_scan``), so ``extract_main_content`` is linear in the size of
+the page; only ``html_blocks`` joins tag paths, whose total length can grow
+with depth times blocks.
 """
 
 from __future__ import annotations
@@ -66,11 +69,7 @@ class Block:
 
     @property
     def is_content(self) -> bool:
-        return (
-            not self.in_boilerplate
-            and self.n_chars >= MIN_CONTENT_CHARS
-            and self.link_density <= MAX_LINK_DENSITY
-        )
+        return _is_content(self.n_chars, self.n_link_chars, self.in_boilerplate)
 
 
 # Plain tags: a start tag with bare or quoted attributes
@@ -182,37 +181,35 @@ def _tokens(html: str):
         i = k
 
 
-def _block(parts: list[str], link_chars: int, path: str, depth: int,
-           boiler: bool) -> Block | None:
+def _block(parts: list[str], link_chars: int, path: tuple | None, depth: int,
+           boiler: bool) -> tuple | None:
     words = "".join(parts).split()
     if not words:
         return None
     text = " ".join(words)
-    return Block(
-        tag_path=path,
-        depth=depth,
-        text=text,
-        n_chars=len(text),
-        n_link_chars=min(link_chars, len(text)),
-        n_words=len(words),
-        in_boilerplate=boiler,
-    )
+    return text, len(words), min(link_chars, len(text)), path, depth, boiler
 
 
-def html_blocks(html: bytes | str) -> list[Block]:
-    """Flatten HTML into the classified block array (the DOM analog of the
-    reference's per-page OCR array, ocr_service.py:89-122). If html.parser
-    raises on the input, the blocks completed so far are returned and the
-    open block's text is dropped."""
-    if isinstance(html, bytes):
-        html = html.decode("utf-8", errors="replace")
-    blocks: list[Block] = []
-    stack: list[str] = []  # open tags
+def _scan(html: str) -> list[tuple[str, int, int, tuple | None, int, bool]]:
+    """One pass over the tokens: a (text, n_words, n_link_chars, path_node,
+    depth, in_boilerplate) tuple per block with text. If html.parser raises,
+    the blocks completed so far are returned and the open block's text is
+    dropped.
+
+    The open-tag stack is a linked list of ``(tag, parent)`` nodes. A block
+    start records its tag path as the top node in O(1), and only
+    ``html_blocks`` joins it into a string. A bad-nesting pop leaves that
+    node, and so the block's path, as it was. ``open_tags`` counts the tags
+    on the stack, so an end tag with no open match costs O(1) at any
+    depth."""
+    blocks = []
+    top = None  # the open-tag stack
+    open_tags: dict[str, int] = {}
     parts: list[str] = []  # text of the open block
     link_chars = 0
     boiler = False  # the open block has text under a boilerplate tag
     skip_depth = link_depth = boiler_depth = 0
-    path, depth = "", 0
+    path, depth, stack_depth = None, 0, 0
     try:
         for kind, value in _tokens(html):
             if kind == _DATA:
@@ -235,12 +232,13 @@ def html_blocks(html: bytes | str) -> list[Block]:
                     skip_depth += 1
                 elif value == "a":
                     link_depth += 1
-                stack.append(value)
+                top = (value, top)
+                stack_depth += 1
+                open_tags[value] = open_tags.get(value, 0) + 1
                 if value in _BLOCK_TAGS:
                     if value in _BOILER_TAGS:
                         boiler_depth += 1
-                    path = "/".join(stack)
-                    depth = len(stack)
+                    path, depth = top, stack_depth
             else:
                 if value in _SKIP_TAGS:
                     if skip_depth:
@@ -249,12 +247,14 @@ def html_blocks(html: bytes | str) -> list[Block]:
                     link_depth -= 1
                 # pop to the matching open tag if present (tolerates bad
                 # nesting)
-                if value in stack:
+                if open_tags.get(value):
                     while True:
-                        top = stack.pop()
-                        if top in _BOILER_TAGS:
+                        tag, top = top
+                        stack_depth -= 1
+                        open_tags[tag] -= 1
+                        if tag in _BOILER_TAGS:
                             boiler_depth -= 1
-                        if top == value:
+                        if tag == value:
                             break
     except Exception:
         return blocks
@@ -264,13 +264,65 @@ def html_blocks(html: bytes | str) -> list[Block]:
     return blocks
 
 
+def _is_content(n_chars: int, n_link_chars: int, in_boilerplate: bool) -> bool:
+    return (
+        not in_boilerplate
+        and n_chars >= MIN_CONTENT_CHARS
+        and (n_link_chars / n_chars if n_chars else 0.0) <= MAX_LINK_DENSITY
+    )
+
+
+def _decode(html: bytes | str) -> str:
+    if isinstance(html, bytes):
+        return html.decode("utf-8", errors="replace")
+    return html
+
+
+def html_blocks(html: bytes | str) -> list[Block]:
+    """Flatten HTML into the classified block array (the DOM analog of the
+    reference's per-page OCR array, ocr_service.py:89-122). If html.parser
+    raises on the input, the blocks completed so far are returned and the
+    open block's text is dropped."""
+    paths: dict[int, str] = {}  # id(node) -> "/".join of the stack it tops
+
+    def path(node: tuple | None) -> str:
+        # climb to the first node whose path is known, then extend it back
+        # down, so blocks that share an ancestor share its join
+        climbed = []
+        while node is not None and id(node) not in paths:
+            climbed.append(node)
+            node = node[1]
+        joined = "" if node is None else paths[id(node)]
+        for n in reversed(climbed):
+            joined = joined + "/" + n[0] if n[1] is not None else n[0]
+            paths[id(n)] = joined
+        return joined
+
+    return [
+        Block(
+            tag_path=path(node),
+            depth=depth,
+            text=text,
+            n_chars=len(text),
+            n_link_chars=n_link_chars,
+            n_words=n_words,
+            in_boilerplate=boiler,
+        )
+        for text, n_words, n_link_chars, node, depth, boiler in _scan(_decode(html))
+    ]
+
+
 # strip set per reference app/models/document.py:177-188
 _CONTROL_RE = re.compile(r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]")
 
 
 def extract_main_content(html: bytes | str) -> str:
     """Main-content text: newline-joined content blocks, control chars
-    stripped. This string is the byte-parity surface per url."""
-    blocks = html_blocks(html)
-    text = "\n".join(b.text for b in blocks if b.is_content)
+    stripped. This string is the byte-parity surface per url. It reads the
+    blocks straight from ``_scan``, so no tag path is ever joined."""
+    text = "\n".join(
+        text
+        for text, _, n_link_chars, _, _, boiler in _scan(_decode(html))
+        if _is_content(len(text), n_link_chars, boiler)
+    )
     return _CONTROL_RE.sub("", text)

@@ -1325,9 +1325,12 @@ DRIVER_PRIORITY: list[str] = [
     "ivf_nprobe_sweep",
     "embedding_near_dups",
     "ann_batch_topk",
+    # semantic_search and pages_extraction run extract_documents, which now
+    # runs the literal-anchored, linear-time NER matchers of core.ner and
+    # the lazy tag paths of core.html_extract's block scan (after the
+    # one-pass tokenizer and the memoised word_confidence in core.ocr);
+    # semantic_search also ranks with similarity.dot
     "semantic_search",
-    # pages_extraction: extract_documents now runs the one-pass tokenizer
-    # in core.html_extract and the memoised word_confidence in core.ocr
     "pages_extraction",
     # tier 2 — r4 single-greens displaced from the r5 window, registry
     # order (the last 3 of them fall below the cut)
