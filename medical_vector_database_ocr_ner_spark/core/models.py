@@ -34,10 +34,27 @@ top-level functions). A module-level factory is cached per worker process
 under its qualified name, so Spark's worker reuse amortizes model load
 across ALL tasks the worker ever runs — the Spark-side equivalent of the
 reference's lru_cache singletons.
+
+``resolve()`` also ends with ``drop_archive_finders()``, a fixed-cost cut
+for every Python task that follows in the worker. Each PySpark task starts
+with ``importlib.invalidate_caches()`` (``setup_spark_files`` in
+``pyspark/worker_util.py``), and on CPython 3.11 that makes every
+``zipimporter`` in ``sys.path_importer_cache`` re-read its archive's whole
+central directory at once. A local Spark 4.1 worker holds 16 of them:
+``pyspark.zip`` and its package directories (12 × 9–11 ms, 1,328
+entries), the ``spark-core`` jar on the worker path (2 × 31–36 ms, 5,359
+entries) and py4j. That is about 170–260 ms per task before any document
+is read; on a 4-core host a 10-row identity task ran ~280 ms. With the
+finders dropped, the next task's invalidation has no archive to re-read,
+and the same task runs ~70 ms. The purge can go once workers no longer
+import from archives, or once the interpreter re-reads an invalidated
+archive lazily.
 """
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from dataclasses import dataclass
 from typing import Any, Callable, Optional
 
@@ -68,6 +85,24 @@ def resolve_factory(factory: Optional[Callable[[], Any]], default: Any) -> Any:
     return _WORKER_CACHE[key]
 
 
+def drop_archive_finders() -> int:
+    """Delete every ``zipimporter`` from ``sys.path_importer_cache``;
+    returns how many were deleted (0 on a second call).
+
+    Deleting an entry is the import system's documented way to force the
+    path entry to be found again: a later import that walks that entry
+    builds a new ``zipimporter`` from ``zipimport``'s directory cache, so
+    imports from the archive keep working without a re-read. What this
+    saves is the eager re-read that ``importlib.invalidate_caches()``
+    makes every cached ``zipimporter`` do on CPython 3.11, once per
+    PySpark task (module docstring)."""
+    cache = sys.path_importer_cache
+    stale = [p for p, f in list(cache.items()) if isinstance(f, zipimport.zipimporter)]
+    for path in stale:
+        cache.pop(path, None)
+    return len(stale)
+
+
 @dataclass(frozen=True)
 class ModelSeam:
     """Picklable bundle of model factories; None fields keep the built-in
@@ -81,13 +116,14 @@ class ModelSeam:
 
     def resolve(self) -> "ResolvedModels":
         """Call inside the worker, once per partition: returns the
-        initialized model functions (worker-cached where possible)."""
+        initialized model functions (worker-cached where possible), then
+        drops the worker's archive finders (``drop_archive_finders``)."""
         from . import (
             embed_text, extract_entities, extract_main_content,
             ocr_payload_pages,
         )
 
-        return ResolvedModels(
+        models = ResolvedModels(
             # default OCR handles BOTH pdf containers (page expansion) and
             # image containers (single page) — reference process_document
             # routes the same way (ocr_service.py:193-208)
@@ -96,6 +132,8 @@ class ModelSeam:
             embed=resolve_factory(self.embed_factory, embed_text),
             html=resolve_factory(self.html_factory, extract_main_content),
         )
+        drop_archive_finders()
+        return models
 
 
 @dataclass

@@ -1329,7 +1329,9 @@ DRIVER_PRIORITY: list[str] = [
     # runs the literal-anchored, linear-time NER matchers of core.ner and
     # the lazy tag paths of core.html_extract's block scan (after the
     # one-pass tokenizer and the memoised word_confidence in core.ocr);
-    # semantic_search also ranks with similarity.dot
+    # both now run ModelSeam.resolve()'s purge of the worker's archive
+    # finders (core.models.drop_archive_finders) in every seam-aware
+    # stage; semantic_search also ranks with similarity.dot
     "semantic_search",
     "pages_extraction",
     # tier 2 — r4 single-greens displaced from the r5 window, registry

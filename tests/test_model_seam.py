@@ -344,3 +344,105 @@ class TestRealCodecBranch:
         assert shape(image_features(media)) == shape(
             image_features(media, self._factory())
         )
+
+
+def _zip_finders():
+    import sys
+    import zipimport
+
+    return [p for p, f in sys.path_importer_cache.items()
+            if isinstance(f, zipimport.zipimporter)]
+
+
+class TestArchiveFinders:
+    """``ModelSeam.resolve()`` drops the worker's ``zipimporter`` finders
+    so the next task's ``importlib.invalidate_caches()`` re-reads no
+    archive (core/models.py module docstring)."""
+
+    def test_drop_keeps_archive_importable(self, tmp_path, monkeypatch):
+        import sys
+        import zipfile
+        import zipimport
+
+        from medical_vector_database_ocr_ner_spark.core.models import (
+            drop_archive_finders,
+        )
+
+        archive = tmp_path / "zarch.zip"
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("zarch_pkg/__init__.py", "")
+            z.writestr("zarch_pkg/first.py", "VALUE = 1\n")
+            z.writestr("zarch_pkg/second.py", "VALUE = 2\n")
+        monkeypatch.syspath_prepend(str(archive))
+        try:
+            import zarch_pkg.first
+
+            assert zarch_pkg.first.VALUE == 1
+            assert str(archive) in _zip_finders()
+            listing = zipimport._zip_directory_cache[str(archive)]
+
+            assert drop_archive_finders() >= 1
+            assert _zip_finders() == []
+            before = dict(sys.path_importer_cache)
+            assert drop_archive_finders() == 0
+            assert sys.path_importer_cache == before
+
+            import zarch_pkg.second
+
+            assert zarch_pkg.second.VALUE == 2
+            # the rebuilt finder reuses the listing: no re-read
+            assert zipimport._zip_directory_cache[str(archive)] is listing
+        finally:
+            for name in [m for m in sys.modules if m.startswith("zarch_pkg")]:
+                del sys.modules[name]
+            for path in [p for p in sys.path_importer_cache
+                         if p.startswith(str(archive))]:
+                del sys.path_importer_cache[path]
+
+    def test_later_task_in_worker_starts_without_archive_finder(self, spark):
+        """Each task of a seam-aware extraction pass reports, from a local
+        (per-partition) html factory, its worker pid, a timestamp and the
+        zip finders it started with. A worker's first task may still
+        start with finders, and the lazy imports of its first extraction
+        can rebuild a few after the purge, so the check covers every task
+        that follows two earlier tasks of this test in the same worker."""
+        from medical_vector_database_ocr_ner_spark.core.models import ModelSeam
+        from medical_vector_database_ocr_ner_spark.operators.extraction import (
+            extract_documents,
+        )
+
+        def html_factory():
+            import os
+            import sys
+            import time
+            import zipimport
+
+            zips = sum(isinstance(f, zipimport.zipimporter)
+                       for f in sys.path_importer_cache.values())
+            stamp = f"{os.getpid()} {time.time_ns()} {zips}"
+            return lambda payload: stamp
+
+        n = 24
+        pages = spark.range(n, numPartitions=n).select(
+            F.format_string("https://h%d.example/p", "id").alias("url"),
+            F.lit(None).cast("timestamp").alias("warc_ts"),
+            F.lit("<html><body><p>x</p></body></html>").cast("binary")
+            .alias("html"),
+            F.lit("en").alias("lang"),
+        )
+        seam = ModelSeam(html_factory=html_factory)
+        tasks = []
+        for _ in range(2):
+            docs = extract_documents(pages, salt_repartition=False, models=seam)
+            tasks += [tuple(map(int, r["extracted_text"].split()))
+                      for r in docs.select("extracted_text").collect()]
+        assert len(tasks) == 2 * n
+
+        later = []
+        for pid in {t[0] for t in tasks}:
+            runs = sorted(t[1:] for t in tasks if t[0] == pid)
+            later += [zips for _, zips in runs[2:]]
+        # 48 tasks on local[4]: unless 24 or more workers take turns, one
+        # of them runs at least three
+        assert later, "no worker ran three tasks of this test"
+        assert later == [0] * len(later)
