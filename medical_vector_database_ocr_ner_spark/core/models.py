@@ -35,9 +35,9 @@ under its qualified name, so Spark's worker reuse amortizes model load
 across ALL tasks the worker ever runs — the Spark-side equivalent of the
 reference's lru_cache singletons.
 
-``resolve()`` also ends with ``drop_archive_finders()``, a fixed-cost cut
-for every Python task that follows in the worker. Each PySpark task starts
-with ``importlib.invalidate_caches()`` (``setup_spark_files`` in
+``drop_archive_finders()`` is a fixed-cost cut for every Python task that
+follows in the worker. Each PySpark task starts with
+``importlib.invalidate_caches()`` (``setup_spark_files`` in
 ``pyspark/worker_util.py``), and on CPython 3.11 that makes every
 ``zipimporter`` in ``sys.path_importer_cache`` re-read its archive's whole
 central directory at once. A local Spark 4.1 worker holds 16 of them:
@@ -46,9 +46,20 @@ entries), the ``spark-core`` jar on the worker path (2 × 31–36 ms, 5,359
 entries) and py4j. That is about 170–260 ms per task before any document
 is read; on a 4-core host a 10-row identity task ran ~280 ms. With the
 finders dropped, the next task's invalidation has no archive to re-read,
-and the same task runs ~70 ms. The purge can go once workers no longer
-import from archives, or once the interpreter re-reads an invalidated
-archive lazily.
+and the same task runs ~70 ms. The purge runs in two places:
+
+- ``operators.extraction.map_rows`` runs it after a partition's last
+  batch, when the task has made every import it needs. Its stages
+  (extraction, the multimodal decoders) leave the next task nothing to
+  re-read.
+- ``resolve()`` ends with it, for ``make_embed_udf``: a scalar pandas UDF
+  has no end-of-task hook. Purging that early is not enough alone: the
+  lazy imports of a worker's first task rebuild a few finders after it
+  (``pyspark.zip``, the ``spark-core`` jar, py4j), and the worker's next
+  task re-reads them (~40–50 ms).
+
+The purge can go once workers no longer import from archives, or once
+the interpreter re-reads an invalidated archive lazily.
 """
 
 from __future__ import annotations
@@ -117,7 +128,8 @@ class ModelSeam:
     def resolve(self) -> "ResolvedModels":
         """Call inside the worker, once per partition: returns the
         initialized model functions (worker-cached where possible), then
-        drops the worker's archive finders (``drop_archive_finders``)."""
+        drops the worker's archive finders (``drop_archive_finders``; see
+        the module docstring for why ``map_rows`` drops them again)."""
         from . import (
             embed_text, extract_entities, extract_main_content,
             ocr_payload_pages,

@@ -4,12 +4,17 @@ Design for 100 TB (SURVEY.md §3.3/§4.2):
 
 - Cheap native predicates run BEFORE these stages (Catalyst can't reorder
   across Python UDFs, so ordering is structural in the pipeline builder).
-- ONE ``mapInPandas`` pass does html→text→spans per partition and DROPS the
-  html bytes in its output — payload bytes cross the JVM↔Python Arrow
-  boundary exactly once and never shuffle.
-- Heavy state (regex compilation, token-vector cache) initializes lazily per
-  Python worker, mirroring the reference's lru_cache model singletons
-  (app/services/vector_service.py:46-52).
+- ``map_rows`` is the one ``mapInPandas`` of the package (the multimodal
+  decoders run through it too): a per-row Python function over a few
+  columns, with the other schema fields passed through. Extraction is ONE
+  such pass doing html→text→spans that DROPS the html bytes in its output
+  — payload bytes cross the JVM↔Python Arrow boundary exactly once and
+  never shuffle after it.
+- ``map_rows`` owns the partition lifecycle: model state resolves once per
+  partition before the first batch (worker-cached for named factories,
+  mirroring the reference's lru_cache model singletons,
+  app/services/vector_service.py:46-52), and the worker's archive finders
+  drop after the last batch (core/models.py).
 - Per-row failures become ``status='failed'`` + error_message rows, the
   quarantine side-output of reference scripts/batch_process.py:115-126.
 """
@@ -61,7 +66,36 @@ PAGE_TYPE = StructType(
 )
 
 
-def _extract_row(kind: str, html: bytes | None, reject_reason: str | None, models):
+def map_rows(df: "DataFrame", schema: StructType, reads, row, init) -> "DataFrame":
+    """Run ``row`` once per row of ``df`` in ONE ``mapInPandas`` pass.
+
+    ``init()`` runs once per partition, before the first batch, and its
+    result is the ``state`` of every ``row(state, *values)`` call, where
+    ``values`` are the row's ``reads`` columns. Fields of ``schema`` that
+    are columns of ``df`` pass through untouched; ``row`` returns the other
+    fields as one tuple in schema order. After the last batch the worker's
+    archive finders are dropped (core/models.py), when every import the
+    task needed has already been made."""
+    passed = [f.name for f in schema if f.name in df.columns]
+    computed = [f.name for f in schema if f.name not in passed]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from ..core.models import drop_archive_finders
+
+        state = init()
+        for batch in batches:
+            rows = [row(state, *vals) for vals in zip(*(batch[c] for c in reads))]
+            cols = list(zip(*rows)) or [()] * len(computed)
+            out = dict(zip(computed, map(list, cols)))
+            yield pd.DataFrame(
+                {n: batch[n] if n in passed else out[n] for n in schema.names}
+            )
+        drop_archive_finders()
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def _extract_row(models, kind: str, html: bytes | None, reject_reason: str | None):
     """(extracted_text, ocr_confidence, entities, status, error)."""
     from ..core import mean_confidence, word_confidence
 
@@ -90,69 +124,13 @@ def _extract_row(kind: str, html: bytes | None, reject_reason: str | None, model
         return None, None, None, "failed", f"{type(exc).__name__}: {exc}"[:1000]
 
 
-def make_extract_partition(seam=None):
-    """mapInPandas body factory: the ModelSeam (core/models.py) resolves
-    ONCE per partition — before the first batch — so a heavy real model
-    (tesseract / spaCy / SentenceTransformer) initializes per worker, not
-    per batch or per row."""
-
-    def extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core.models import DEFAULT_SEAM
-
-        models = (seam or DEFAULT_SEAM).resolve()
-        for batch in batches:
-            texts, confs, ents, statuses, errors = [], [], [], [], []
-            rejects = (
-                batch["reject_reason"]
-                if "reject_reason" in batch.columns
-                else [None] * len(batch)
-            )
-            for kind, html, rej in zip(batch["kind"], batch["html"], rejects):
-                t, c, e, s, err = _extract_row(kind, html, rej, models)
-                texts.append(t)
-                confs.append(c)
-                ents.append(e)
-                statuses.append(s)
-                errors.append(err)
-            yield pd.DataFrame(
-                {
-                    "url": batch["url"],
-                    "warc_ts": batch["warc_ts"],
-                    "lang": batch["lang"],
-                    "kind": batch["kind"],
-                    "extracted_text": texts,
-                    "ocr_confidence": confs,
-                    "entities": ents,
-                    "status": statuses,
-                    "error_message": errors,
-                }
-            )
-
-    return extract_partition
-
-
-def make_ner_udf(seam=None):
-    """Seam-aware X3 span-extraction UDF. A scalar pandas UDF body runs
-    once per Arrow BATCH, so the seam resolves through a closure cell:
-    unnamed factories (closures/partials) initialize at most once per
-    task, named factories once per worker via core/models.py's cache —
-    never per batch."""
-    cell: dict = {}
-
-    def _ner(texts: pd.Series) -> pd.Series:
-        if "m" not in cell:
-            from ..core.models import DEFAULT_SEAM
-
-            cell["m"] = (seam or DEFAULT_SEAM).resolve()
-        models = cell["m"]
-        return texts.map(lambda t: models.ner(t) if t else [])
-
-    return pandas_udf(ArrayType(ENTITY_TYPE))(_ner)
-
-
 def make_embed_udf(seam=None):
-    """Seam-aware X5 embedding UDF (same once-per-task/worker resolution
-    via closure cell as make_ner_udf).
+    """Seam-aware X5 embedding UDF. A scalar pandas UDF body runs once per
+    Arrow BATCH, so the seam resolves through a closure cell: unnamed
+    factories (closures/partials) initialize at most once per task, named
+    factories once per worker via core/models.py's cache — never per
+    batch. This stage has no end-of-task hook, so ``resolve()`` itself
+    drops the archive finders (core/models.py).
 
     Hot path is vectorized: each document's vector stays a float32 numpy
     array and Arrow converts the whole batch — never ``[float(x) for x in
@@ -178,10 +156,6 @@ def make_embed_udf(seam=None):
     return pandas_udf(ArrayType(FloatType()))(_embed)
 
 
-# default-seam NER column UDF, re-exported by the operators package
-ner_udf = make_ner_udf()
-
-
 @pandas_udf(ArrayType(PAGE_TYPE))
 def pdf_pages_udf(payloads: pd.Series) -> pd.Series:
     """X2 page expansion: pdf binary → array of (page_text, confidence);
@@ -196,14 +170,15 @@ def pdf_pages_udf(payloads: pd.Series) -> pd.Series:
 
 
 def extract_documents(
-    pages: "DataFrame", num_partitions: int | None = None,
-    salt_repartition: bool = True, models=None,
+    pages: "DataFrame", num_partitions: int | None = None, models=None,
 ) -> "DataFrame":
     """Full extraction DAG: pages → documents (FIXTURES.md §2 schema).
 
     ``models``: an optional core.models.ModelSeam swapping the real
-    OCR/NER/HTML models into the mapInPandas stage (factories initialize
-    once per worker — see core/models.py for the tesseract/spaCy drop-in).
+    OCR/NER/HTML models into the Python stage (factories initialize once
+    per worker — see core/models.py for the tesseract/spaCy drop-in).
+    ``num_partitions``: the url-hash partition count of the Python stage
+    (default 4× the default parallelism).
 
     Stage order is deliberate (SURVEY.md §4.2), and the whole DAG is ONE
     scan of the input (a quarantine-side union would scan twice — 2× IO at
@@ -212,14 +187,16 @@ def extract_documents(
          computed in codegen into a ``reject_reason`` column; rejected rows'
          payload bytes are nulled out so they never shuffle;
       2. native payload routing (kind column);
-      3. salted url-hash repartition to defeat host skew BEFORE the
-         expensive Python stage (AQE cannot rebalance a map-only stage);
-      4. one mapInPandas pass (surviving html crosses Arrow exactly once,
-         is dropped on output; rejects pass straight through as
-         status='failed' quarantine rows — never silently dropped);
+      3. url-hash repartition to defeat host skew BEFORE the expensive
+         Python stage (AQE cannot rebalance a map-only stage);
+      4. one ``map_rows`` pass of ``_extract_row`` (surviving html crosses
+         Arrow exactly once, is dropped on output; rejects pass straight
+         through as status='failed' quarantine rows — never silently
+         dropped);
       5. native post-compute: content_hash, entity_count, quality flags,
          metadata map.
     """
+    from ..core.models import DEFAULT_SEAM
     from ..functions import columns as FX
 
     pages = pages.select("url", "warc_ts", "html", "lang")
@@ -242,21 +219,21 @@ def extract_documents(
         "reject_reason",
     )
 
-    if salt_repartition:
-        if num_partitions is None:
-            # 4× cores: per-document cost is skewed (PDFs, giant pages), so
-            # several small waves balance far better than one task per core
-            # (measured: +50% throughput at 32 cores vs 1×; see BENCH.md)
-            num_partitions = 4 * routed.sparkSession.sparkContext.defaultParallelism
-        # hash-repartition on the FULL url: every row is hashed
-        # independently, so host-level skew cannot survive. (Partitioning on
-        # a precomputed pmod(xxhash64(url), N) salt column is WORSE: Spark
-        # re-hashes the N salt values, whose collisions leave ~40% of
-        # partitions empty and others doubled — measured in tests/test_skew.)
-        routed = routed.repartition(num_partitions, F.col("url"))
+    if num_partitions is None:
+        # 4× cores: per-document cost is skewed (PDFs, giant pages), so
+        # several small waves balance far better than one task per core
+        # (measured: +50% throughput at 32 cores vs 1×; see BENCH.md)
+        num_partitions = 4 * routed.sparkSession.sparkContext.defaultParallelism
+    # hash-repartition on the FULL url: every row is hashed independently,
+    # so host-level skew cannot survive. (Partitioning on a precomputed
+    # pmod(xxhash64(url), N) salt column is WORSE: Spark re-hashes the N
+    # salt values, whose collisions leave ~40% of partitions empty and
+    # others doubled — measured in tests/test_skew.)
+    routed = routed.repartition(num_partitions, F.col("url"))
 
-    docs = routed.mapInPandas(
-        make_extract_partition(models), schema=DOCUMENT_SCHEMA
+    docs = map_rows(
+        routed, DOCUMENT_SCHEMA, ("kind", "html", "reject_reason"),
+        _extract_row, (models or DEFAULT_SEAM).resolve,
     )
 
     return docs.select(

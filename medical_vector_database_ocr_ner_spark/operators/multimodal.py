@@ -1,7 +1,7 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
-The Spark-side plumbing (schema, batch shape, mapInPandas signatures,
-partitioning) is real and tested; the actual codec work is stubbed —
+The Spark-side plumbing (schema, batch shape, the ``map_rows`` stage of
+operators/extraction.py, partitioning) is real and tested; the actual codec work is stubbed —
 image/audio libraries are not in this container. Each decode fn first
 tries the real library (PIL/soundfile) and otherwise:
 
@@ -15,7 +15,7 @@ tries the real library (PIL/soundfile) and otherwise:
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -23,6 +23,9 @@ from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType, TimestampType,
 )
+
+from ..core.models import resolve_factory
+from .extraction import map_rows
 
 MEDIA_SCHEMA = StructType(
     [
@@ -93,14 +96,16 @@ IMAGE_FEATURES_SCHEMA = StructType(
 
 
 def image_features(media, decoder_factory=None):
-    """mapInPandas image decode/feature stage: payload bytes cross Arrow
-    once, per-row failures quarantine into the error column.
+    """Image decode/feature stage, one ``map_rows`` pass of ``_image_row``:
+    payload bytes cross Arrow once, per-row failures quarantine into the
+    error column.
 
     ``decoder_factory``: optional zero-arg factory returning a
     ``bytes -> {"width","height","channels"}`` callable — the real-codec
-    seam. Resolved via core/models.py: once per worker for module-level
-    factories, once per partition otherwise; default keeps the built-in
-    header/PIL decode. Real-codec recipe (runs once per Python worker;
+    seam. ``map_rows`` resolves it once per partition through
+    ``core.models.resolve_factory``, which calls a module-level factory
+    once per worker and any other factory once per partition; default
+    keeps the built-in header/PIL decode. Real-codec recipe (runs once per Python worker;
     the plan shape is identical to the stand-in's — pinned by
     tests/test_model_seam.py::test_real_pil_branch_via_worker_fake_pil)::
 
@@ -118,35 +123,21 @@ def image_features(media, decoder_factory=None):
     Undecodable payloads keep the same contract either way: the decoder
     raises, the row lands in quarantine with null dims + an ``error``
     string, the job never fails."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core.models import resolve_factory
-
-        decode = resolve_factory(decoder_factory, _decode_image)
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "width", "height", "channels",
-                                   "n_bytes", "error")}
-            for mid, payload in zip(batch["media_id"], batch["payload"]):
-                out["media_id"].append(mid)
-                out["n_bytes"].append(len(payload or b""))
-                try:
-                    f = decode(payload or b"")
-                    out["width"].append(f["width"])
-                    out["height"].append(f["height"])
-                    out["channels"].append(f["channels"])
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["channels"].append(None)
-                    out["error"].append(f"{type(exc).__name__}: {exc}"[:500])
-            yield pd.DataFrame(out)
-
-    return (
-        media.where(F.col("kind") == "image")
-        .select("media_id", "payload")
-        .mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
+    return map_rows(
+        media.where(F.col("kind") == "image").select("media_id", "payload"),
+        IMAGE_FEATURES_SCHEMA, ("payload",), _image_row,
+        partial(resolve_factory, decoder_factory, _decode_image),
     )
+
+
+def _image_row(decode, payload: bytes | None):
+    """(width, height, channels, n_bytes, error) of one image payload."""
+    payload = payload or b""
+    try:
+        f = decode(payload)
+        return f["width"], f["height"], f["channels"], len(payload), None
+    except Exception as exc:
+        return None, None, None, len(payload), f"{type(exc).__name__}: {exc}"[:500]
 
 
 FRAME_SCHEMA = ArrayType(
@@ -200,31 +191,17 @@ def audio_features(media, decoder_factory=None):
     """Same real-codec seam as image_features: ``decoder_factory() ->
     (bytes -> {"sample_rate","n_samples","duration_s"})``, e.g. a factory
     importing soundfile/librosa once per worker."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core.models import resolve_factory
-
-        decode = resolve_factory(decoder_factory, _decode_audio)
-        for batch in batches:
-            out = {k: [] for k in
-                   ("media_id", "sample_rate", "n_samples", "duration_s", "error")}
-            for mid, payload in zip(batch["media_id"], batch["payload"]):
-                out["media_id"].append(mid)
-                try:
-                    f = decode(payload or b"")
-                    out["sample_rate"].append(f["sample_rate"])
-                    out["n_samples"].append(f["n_samples"])
-                    out["duration_s"].append(float(f["duration_s"]))
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["sample_rate"].append(None)
-                    out["n_samples"].append(None)
-                    out["duration_s"].append(None)
-                    out["error"].append(f"{type(exc).__name__}: {exc}"[:500])
-            yield pd.DataFrame(out)
-
-    return (
-        media.where(F.col("kind") == "audio")
-        .select("media_id", "payload")
-        .mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    return map_rows(
+        media.where(F.col("kind") == "audio").select("media_id", "payload"),
+        AUDIO_FEATURES_SCHEMA, ("payload",), _audio_row,
+        partial(resolve_factory, decoder_factory, _decode_audio),
     )
+
+
+def _audio_row(decode, payload: bytes | None):
+    """(sample_rate, n_samples, duration_s, error) of one audio payload."""
+    try:
+        f = decode(payload or b"")
+        return f["sample_rate"], f["n_samples"], float(f["duration_s"]), None
+    except Exception as exc:
+        return None, None, None, f"{type(exc).__name__}: {exc}"[:500]

@@ -3,8 +3,8 @@ union → first-wins dedup → label-map → sort pipeline
 (app/services/ner_service.py:50-124) expressed as DataFrame operators over
 an exploded span relation, instead of fused inside one UDF.
 
-The fused form (operators.extraction.ner_udf) is the hot path — per-doc
-work, zero shuffles. This relational form exists because (a) it IS the
+The fused form (the ``entities`` column of ``extract_documents`` in
+operators/extraction.py) is the hot path — per-doc work, zero shuffles. This relational form exists because (a) it IS the
 reference's dataflow made visible to Catalyst, (b) the label map lives in
 DATA (broadcast dim table) not code, and (c) tests prove both forms emit
 identical spans — the equivalence the byte-parity contract rides on."""

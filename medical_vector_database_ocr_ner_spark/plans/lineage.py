@@ -67,14 +67,12 @@ def run_with_lineage(
         return {"processed_buckets": 0, "skipped_buckets": n_done}
 
     t0 = time.time()
-    # one shuffle keyed on url (uniform); the bucket column is recomputed
-    # after extraction purely as the output-partition / lineage key
-    docs = extract_documents(
-        todo.repartition(n_buckets, F.col("url")).select(
-            "url", "warc_ts", "html", "text", "lang"
-        ),
-        salt_repartition=False,
-    ).withColumn("bucket", url_salt_col(F.col("url"), n_buckets).cast("int"))
+    # one shuffle keyed on url (uniform), n_buckets wide; the bucket column
+    # is recomputed after extraction purely as the output-partition /
+    # lineage key
+    docs = extract_documents(todo, num_partitions=n_buckets).withColumn(
+        "bucket", url_salt_col(F.col("url"), n_buckets).cast("int")
+    )
     docs = docs.cache()
 
     # idempotent per-bucket output: dynamic partition overwrite replaces

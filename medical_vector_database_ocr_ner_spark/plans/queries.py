@@ -1325,19 +1325,21 @@ DRIVER_PRIORITY: list[str] = [
     "ivf_nprobe_sweep",
     "embedding_near_dups",
     "ann_batch_topk",
-    # semantic_search and pages_extraction run extract_documents, which now
-    # runs the literal-anchored, linear-time NER matchers of core.ner and
-    # the lazy tag paths of core.html_extract's block scan (after the
-    # one-pass tokenizer and the memoised word_confidence in core.ocr);
-    # both now run ModelSeam.resolve()'s purge of the worker's archive
-    # finders (core.models.drop_archive_finders) in every seam-aware
-    # stage; semantic_search also ranks with similarity.dot
+    # semantic_search, pages_extraction and multimodal_image_features now
+    # run their per-row Python pass through operators.extraction.map_rows,
+    # which drops the worker's archive finders after each partition's last
+    # batch (core.models.drop_archive_finders). The first two run
+    # extract_documents, with the literal-anchored, linear-time NER
+    # matchers of core.ner and the lazy tag paths of core.html_extract's
+    # block scan (after the one-pass tokenizer and the memoised
+    # word_confidence in core.ocr); semantic_search also ranks with
+    # similarity.dot
     "semantic_search",
     "pages_extraction",
+    "multimodal_image_features",
     # tier 2 — r4 single-greens displaced from the r5 window, registry
     # order (the last 3 of them fall below the cut)
     "hll_distinct_tokens",
-    "multimodal_image_features",
     "latest_snapshot_per_url",
     "url_canonical_dupes",
     "bloom_url_seen",

@@ -164,7 +164,7 @@ class TestWordConfidenceMemo:
 
         core.word_confidence.cache_clear()
         html = f"<html><body><p>{text}</p></body></html>".encode()
-        row = _extract_row("html", html, None, DEFAULT_SEAM.resolve())
+        row = _extract_row(DEFAULT_SEAM.resolve(), "html", html, None)
         assert row[3] == "completed"
         info = core.word_confidence.cache_info()
         assert info.hits + info.misses == n_words

@@ -135,7 +135,7 @@ class TestSeamInExtraction:
             [("https://x.example/p", None, html, "en")],
             "url string, warc_ts timestamp, html binary, lang string",
         )
-        row = extract_documents(pages, salt_repartition=False).collect()[0]
+        row = extract_documents(pages, num_partitions=1).collect()[0]
         want_text = extract_main_content(html)
         assert row["extracted_text"] == want_text
         want_ents = extract_entities(want_text)
@@ -403,9 +403,10 @@ class TestArchiveFinders:
         """Each task of a seam-aware extraction pass reports, from a local
         (per-partition) html factory, its worker pid, a timestamp and the
         zip finders it started with. A worker's first task may still
-        start with finders, and the lazy imports of its first extraction
-        can rebuild a few after the purge, so the check covers every task
-        that follows two earlier tasks of this test in the same worker."""
+        start with finders; ``map_rows`` drops them after the task's last
+        batch, once the task's lazy imports are made, so the check covers
+        every task that follows an earlier task of this test in the same
+        worker."""
         from medical_vector_database_ocr_ner_spark.core.models import ModelSeam
         from medical_vector_database_ocr_ner_spark.operators.extraction import (
             extract_documents,
@@ -433,16 +434,17 @@ class TestArchiveFinders:
         seam = ModelSeam(html_factory=html_factory)
         tasks = []
         for _ in range(2):
-            docs = extract_documents(pages, salt_repartition=False, models=seam)
+            docs = extract_documents(pages, num_partitions=n, models=seam)
             tasks += [tuple(map(int, r["extracted_text"].split()))
                       for r in docs.select("extracted_text").collect()]
         assert len(tasks) == 2 * n
 
         later = []
         for pid in {t[0] for t in tasks}:
-            runs = sorted(t[1:] for t in tasks if t[0] == pid)
-            later += [zips for _, zips in runs[2:]]
-        # 48 tasks on local[4]: unless 24 or more workers take turns, one
-        # of them runs at least three
-        assert later, "no worker ran three tasks of this test"
+            # the rows of one task share its stamp
+            runs = sorted({t[1:] for t in tasks if t[0] == pid})
+            later += [zips for _, zips in runs[1:]]
+        # two passes over 24 url-hash partitions on local[4]: unless every
+        # non-empty task gets a worker of its own, one worker runs two
+        assert later, "no worker ran two tasks of this test"
         assert later == [0] * len(later)

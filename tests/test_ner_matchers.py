@@ -183,6 +183,6 @@ class TestGazetteerCaseVariants:
         html = ("<p>After the ſurgery the patient received İnsulin twice a "
                 "day for the \u212aidney.</p>").encode()
         text, _, entities, status, error = _extract_row(
-            "html", html, None, DEFAULT_SEAM.resolve())
+            DEFAULT_SEAM.resolve(), "html", html, None)
         assert (status, error) == ("completed", None)
         assert {e["text"] for e in entities} >= {"ſurgery", "İnsulin", "\u212aidney"}
