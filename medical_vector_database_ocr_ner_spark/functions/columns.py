@@ -226,13 +226,31 @@ def redact_map_col(map_col: Column) -> Column:
     return F.transform_values(map_col, _redact)
 
 
+def url_host_col(url: Column | str) -> Column:
+    """The host of an http(s) url: everything between the scheme and the
+    first '/', or '' when the url has no http(s) scheme. The one Spark
+    definition every crawl query keys its per-host work on."""
+    return F.regexp_extract(url, r"^https?://([^/]+)", 1)
+
+
+def url_page_no_col(url: Column | str) -> Column:
+    """The url's trailing digits as a bigint, NULL when it has none.
+    try_cast, because a url without a digit suffix (e.g. a ".pdf" one)
+    extracts '', which a plain cast under ANSI fails with
+    CAST_INVALID_INPUT instead of yielding the NULL that filters it out."""
+    return F.regexp_extract(url, r"([0-9]+)$", 1).try_cast("bigint")
+
+
 def url_filter_rule_col(url: Column) -> Column:
     """First-failing-rule classification for a url (or 'pass') — the
     zeroth, bytes-free tier of the curation funnel (C4/CCNet both gate on
-    the url before any fetch/decode). Single-sourced here so the batch
-    gate query (plans/queries_ext.q_url_filter_gate), its DuckDB oracle,
-    and the streaming frontier admission (streaming/frontier.py) cannot
-    drift. Pure codegen CASE over one string column."""
+    the url before any fetch/decode). The batch gate query
+    (plans/queries_ext.q_url_filter_gate) and the frontier admission of
+    streaming/frontier.outlink_candidates, which the batch
+    q_outlink_frontier also runs, call this one definition. The DuckDB
+    oracles carry their own mirror (queries_ext._url_rule_sql), so the
+    oracle check still compares two independent texts. Pure codegen CASE
+    over one string column."""
     path = F.regexp_extract(url, r"^https?://[^/]+(/.*)?$", 1)
     return (
         F.when(~url.rlike(r"^https?://"), F.lit("bad_scheme"))

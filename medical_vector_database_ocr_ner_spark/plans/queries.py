@@ -1301,7 +1301,7 @@ _load_ext()
 # Everything past slot 50 stays in the registry (local gate + pytest still
 # cover it) and rotates back in a later round.
 DRIVER_PRIORITY: list[str] = [
-    # ---- round-6 window ----
+    # ---- round-10 window ----
     # tier 1 — stale (the tools/stale_greens.py set): these queries now
     # call the operator they used to copy (dedup.exact_dedup / simhash /
     # word_shingles / _sign_bucket, textstats.shingle_fingerprint,
@@ -1313,10 +1313,49 @@ DRIVER_PRIORITY: list[str] = [
     "ann_topk_cosine",
     "lsh_bucket_histogram",
     "minhash_lsh_recall",
+    # tier 1 — stale since round 10: the crawl queries call the shared url
+    # building blocks instead of inlining them, and their oracles render
+    # the shared pages source (_PAGES_SRC) and host link CTEs
+    # (_HOST_LINKS_SQL); pagerank_hosts takes its host count inside the
+    # plan; page_triage_native's oracle changed in whitespace only
+    "host_stats_salted",
+    "latest_snapshot_per_url",
+    "page_triage_native",
+    "url_canonical_dupes",
+    "domain_blocklist_filter",
+    "pagerank_hosts",
+    "domain_cap_sample",
+    "bloom_url_seen",
+    "anchor_link_stats",
+    "url_churn_stats",
+    "extraction_yield_by_host",
+    "surt_prefix_scan",
+    "recrawl_priority",
+    "span3_dedup_stats",
+    "outlink_frontier",
+    "crawl_diff",
+    "url_filter_gate",
+    "politeness_audit",
+    "robots_compliance",
+    "image_ocr_native",
+    "hits_hosts",
+    "rendezvous_shard_assign",
+    "crawl_budget_allocation",
+    "scd2_url_history",
+    "crawl_depth_bfs",
+    "etld1_registrable",
+    "host_triangle_count",
+    "morton_layout_keys",
+    "pages_gen_probe",
+    "host_mix_shift",
     # tier 1b — fingerprint unmoved but a helper they run through
     # changed (q_simhash16; IvfIndex / batch_topk / embedding_cosine_dups
     # / search_topk on similarity.dot, now SQL-rendered from dot_sql); the
-    # tool only sees the query's own source, so these are hand-audited
+    # tool only sees the query's own source, so these are hand-audited.
+    # The same blind spot covers the round-10 helpers
+    # functions/columns.url_host_col and url_page_no_col,
+    # queries_ext._host_links and streaming/frontier.outlink_candidates:
+    # an edit to one of them must rotate its callers in here by hand
     "knn_hydrated",
     "simhash_band_pairs",
     "simhash_hot_bucket_split",
@@ -1337,47 +1376,22 @@ DRIVER_PRIORITY: list[str] = [
     "semantic_search",
     "pages_extraction",
     "multimodal_image_features",
-    # tier 2 — r4 single-greens displaced from the r5 window, registry
-    # order (the last 3 of them fall below the cut)
+    # tier 2 — r4 single-greens, registry order; the round-10 stale set
+    # took the places of the other 16
     "hll_distinct_tokens",
-    "latest_snapshot_per_url",
-    "url_canonical_dupes",
-    "bloom_url_seen",
-    "crawl_diff",
-    "robots_compliance",
-    "image_ocr_native",
     "cms_heavy_hitters",
-    "intra_doc_repetition",
-    "tfidf_distinctive_terms",
-    "unigram_lm_doc_score",
-    "interval_overlap_join",
-    "weighted_sample",
-    "hits_hosts",
-    "length_quantile_sketch",
-    "dsir_importance_weights",
-    "rendezvous_shard_assign",
-    "pmi_bigrams",
-    "crawl_budget_allocation",
-    "scd2_url_history",
-    "source_mirror_detect",
-    "crawl_depth_bfs",
-    "partition_checksums",
-    "pit_snapshot_lookup",
-    "epoch_shuffle_assign",
-    "session_window_stats",
-    "cdc_chunk_dedup",
-    "etld1_registrable",
-    "host_triangle_count",
-    "trimmed_mean_length",
-    "morton_layout_keys",
-    "lang_id_confusion",
     # tier 3 — empty this round: both headline anchors (pages_extraction,
     # semantic_search) sit in tier 1b
     # ---- below the 50-row cut: everything else ----
-    # the remaining r4 singles (unpivot_doc_stats, outer_explode_audit,
-    # curation_funnel), the r5 singles (pages_gen_probe,
-    # error_context_outer, host_mix_shift) and the multi-green anchors;
-    # local gate + pytest still cover all of them every session
+    # the remaining r4 singles (intra_doc_repetition,
+    # tfidf_distinctive_terms, unigram_lm_doc_score, interval_overlap_join,
+    # weighted_sample, length_quantile_sketch, dsir_importance_weights,
+    # pmi_bigrams, source_mirror_detect, partition_checksums,
+    # pit_snapshot_lookup, epoch_shuffle_assign, session_window_stats,
+    # cdc_chunk_dedup, trimmed_mean_length, lang_id_confusion,
+    # unpivot_doc_stats, outer_explode_audit, curation_funnel), the r5
+    # singles (error_context_outer) and the multi-green anchors; local
+    # gate + pytest still cover all of them every session
 ]
 
 

@@ -19,6 +19,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.columns import (
+    url_filter_rule_col,
+    url_host_col,
+    url_page_no_col,
+)
 from .queries import (
     H60_SQL,
     ORACLE_MINHASH_SIG,
@@ -1338,7 +1343,7 @@ def q_host_stats_salted(spark, sf):
     from .queries import _pages_for_sf
 
     pages = _pages_for_sf(spark, sf)
-    host = F.regexp_extract("url", r"https?://([^/]+)/", 1)
+    host = url_host_col("url")
     salted = pages.select(
         host.alias("host"),
         F.pmod(F.xxhash64("url"), F.lit(16)).alias("_salt"),
@@ -1366,15 +1371,20 @@ def q_host_stats_salted(spark, sf):
 # the golden oracles in plans/queries.py).
 from .queries import _SF_TO_N_PAGES_SQL as _N_PAGES_SQL
 
+# the FROM/WHERE of every oracle over the synthetic pages table
+_PAGES_SRC = f"""
+  FROM read_parquet('/tmp/spark_graft_pages/pages_n*_s42_v3.parquet/*.parquet',
+                    filename=true)
+  WHERE filename LIKE
+        '%pages_n' || CAST({_N_PAGES_SQL} AS VARCHAR) || '_s42_v3.parquet%'
+"""
+
 ORACLE_HOST_STATS = f"""
 SELECT regexp_extract(url, 'https?://([^/]+)/', 1) AS host,
        count(*) AS n_pages,
        CAST(sum(octet_length(html)) AS BIGINT) AS total_html_bytes,
        count(DISTINCT lang) AS n_langs
-FROM read_parquet('/tmp/spark_graft_pages/pages_n*_s42_v3.parquet/*.parquet',
-                  filename=true)
-WHERE filename LIKE
-      '%pages_n' || CAST({_N_PAGES_SQL} AS VARCHAR) || '_s42_v3.parquet%'
+  {_PAGES_SRC}
 GROUP BY 1
 """
 
@@ -1556,9 +1566,7 @@ def q_latest_snapshot_per_url(spark, sf):
     from .queries import _pages_for_sf
 
     pages = _pages_for_sf(spark, sf).select("url", "warc_ts", "lang")
-    # try_cast: non-matching urls (e.g. ".pdf" suffixes) yield '' — must
-    # become NULL (then filtered), not CAST_INVALID_INPUT under ANSI
-    page_no = F.regexp_extract("url", r"([0-9]+)$", 1).try_cast("bigint")
+    page_no = url_page_no_col("url")
     recrawl = (
         pages.where(page_no % 3 == 0)
         .select(
@@ -1579,10 +1587,7 @@ def q_latest_snapshot_per_url(spark, sf):
 ORACLE_LATEST_SNAPSHOT = f"""
 WITH pages AS (
   SELECT url, warc_ts, lang
-  FROM read_parquet('/tmp/spark_graft_pages/pages_n*_s42_v3.parquet/*.parquet',
-                    filename=true)
-  WHERE filename LIKE
-        '%pages_n' || CAST({_N_PAGES_SQL} AS VARCHAR) || '_s42_v3.parquet%'
+  {_PAGES_SRC}
 ), snaps AS (
   SELECT url, warc_ts, lang FROM pages
   UNION ALL
@@ -1675,10 +1680,7 @@ def q_page_triage_native(spark, sf):
 ORACLE_PAGE_TRIAGE = f"""
 WITH pages AS (
   SELECT url, decode(html) AS s
-  FROM read_parquet('/tmp/spark_graft_pages/pages_n*_s42_v3.parquet/*.parquet',
-                    filename=true)
-  WHERE filename LIKE
-        '%pages_n' || CAST({_N_PAGES_SQL} AS VARCHAR) || '_s42_v3.parquet%'
+  {_PAGES_SRC}
     AND substr(hex(html), 1, 2) = '3C'
 ), feat AS (
   SELECT url,
@@ -1710,10 +1712,8 @@ def q_url_canonical_dupes(spark, sf):
     from .queries import _pages_for_sf
 
     pages = _pages_for_sf(spark, sf).select("url")
-    # try_cast: non-matching urls (e.g. ".pdf" suffixes) yield '' — must
-    # become NULL (then filtered), not CAST_INVALID_INPUT under ANSI
-    page_no = F.regexp_extract("url", r"([0-9]+)$", 1).try_cast("bigint")
-    host = F.regexp_extract("url", r"^https?://([^/]+)", 1)
+    page_no = url_page_no_col("url")
+    host = url_host_col("url")
     path = F.regexp_extract("url", r"^https?://[^/]+(.*)$", 1)
     variants = pages.where(page_no % 5 == 0).select(
         F.concat(
@@ -1738,10 +1738,7 @@ def q_url_canonical_dupes(spark, sf):
 ORACLE_URL_CANON = f"""
 WITH pages AS (
   SELECT url
-  FROM read_parquet('/tmp/spark_graft_pages/pages_n*_s42_v3.parquet/*.parquet',
-                    filename=true)
-  WHERE filename LIKE
-        '%pages_n' || CAST({_N_PAGES_SQL} AS VARCHAR) || '_s42_v3.parquet%'
+  {_PAGES_SRC}
 ), allu AS (
   SELECT url FROM pages
   UNION ALL
@@ -1979,7 +1976,7 @@ def q_domain_blocklist_filter(spark, sf):
 
     pages = _pages_for_sf(spark, sf).select(
         F.col("url"),
-        F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host"),
+        url_host_col("url").alias("host"),
     )
     host_no = F.regexp_extract("host", r"host([0-9]+)", 1).try_cast("bigint")
     blocklist = (
@@ -1995,10 +1992,7 @@ def q_domain_blocklist_filter(spark, sf):
 ORACLE_BLOCKLIST = f"""
 WITH pages AS (
   SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host
-  FROM read_parquet('/tmp/spark_graft_pages/pages_n*_s42_v3.parquet/*.parquet',
-                    filename=true)
-  WHERE filename LIKE
-        '%pages_n' || CAST({_N_PAGES_SQL} AS VARCHAR) || '_s42_v3.parquet%'
+  {_PAGES_SRC}
 ), block AS (
   SELECT DISTINCT host FROM pages
   WHERE TRY_CAST(regexp_extract(host, 'host([0-9]+)', 1) AS BIGINT) % 13 = 0
@@ -2091,14 +2085,42 @@ EXT_QUERIES.update(WEB_QUERIES_C)
 # === webtext wave D: link graph, native model scoring, domain caps, =========
 # === Bloom frontier =========================================================
 
-_PAGES_REL = (
-    "read_parquet('/tmp/spark_graft_pages/pages_n*_s42_v3.parquet/*.parquet',"
-    " filename=true)"
-)
-_PAGES_WHERE = (
-    "filename LIKE '%pages_n' || CAST(" + _N_PAGES_SQL + " AS VARCHAR)"
-    " || '_s42_v3.parquet%'"
-)
+def _host_links(pages):
+    """The synthetic host link graph that pagerank_hosts, hits_hosts,
+    crawl_depth_bfs and host_triangle_count run on: two links per page,
+    from its host to host{(7i + 1) % 50} and to host{i % 10} (i = the
+    page id), self-links dropped. The fixture's own anchors are all
+    same-host relative links, so the targets are derived from the page id
+    instead. One (src, dst) row per link; callers aggregate."""
+    i = F.regexp_extract("url", r"([0-9]+)(\.pdf)?$", 1).try_cast("bigint")
+    links = pages.select(url_host_col("url").alias("src"), i.alias("i"))
+
+    def dst(expr):
+        return F.concat(F.lit("host"), expr.cast("string"), F.lit(".example"))
+
+    return (
+        links.select("src", dst((F.col("i") * 7 + 1) % 50).alias("dst"))
+        .unionByName(links.select("src", dst(F.col("i") % 10).alias("dst")))
+        .where(F.col("src") != F.col("dst"))
+    )
+
+
+# DuckDB mirror of _host_links: the CTEs links(src, i) and
+# host_links(src, dst), for the four graph oracles to build on
+_HOST_LINKS_SQL = f"""links AS (
+  SELECT regexp_extract(url, 'https?://([^/]+)/', 1) AS src,
+         TRY_CAST(regexp_extract(url, '([0-9]+)(\\.pdf)?$', 1) AS BIGINT) AS i
+  {_PAGES_SRC}
+), host_links AS (
+  SELECT src, dst FROM (
+    SELECT src, 'host' || CAST((i * 7 + 1) % 50 AS VARCHAR) || '.example'
+               AS dst
+    FROM links
+    UNION ALL
+    SELECT src, 'host' || CAST(i % 10 AS VARCHAR) || '.example' AS dst
+    FROM links
+  ) WHERE src <> dst
+)"""
 
 _PR_SCALE = 10**12  # integer-scaled rank mass (exact in both engines)
 _PR_ITERS = 3
@@ -2107,33 +2129,24 @@ _PR_ITERS = 3
 def q_pagerank_hosts(spark, sf):
     """Host-level PageRank over the crawl link graph — the canonical
     iterative DataFrame algorithm (crawl prioritization / domain authority
-    for training-data curation). Link targets are synthesized
-    deterministically from the page id (the fixture's boilerplate anchors
-    are all same-host relative links), then aggregated to a weighted host
-    graph: page-scale data is touched exactly once (the edge aggregation);
-    every iteration after that shuffles only the host graph — O(active
-    host pairs), corpus-size-independent — so 10^12 pages cost one corpus
-    pass plus iterations over a relation ~4 orders of magnitude smaller.
+    for training-data curation). The synthetic links of _host_links are
+    aggregated to a weighted host graph: page-scale data is touched
+    exactly once (the edge aggregation); every iteration after that
+    shuffles only the host graph — O(active host pairs), corpus-size-
+    independent — so 10^12 pages cost one corpus pass plus iterations
+    over a relation ~4 orders of magnitude smaller.
 
     Float PageRank sums diverge across engines (addition order), so ranks
     are integer-scaled (_PR_SCALE total mass) and every step uses integer
     division (`div` / `//`): contributions and damping round identically
     in Spark and DuckDB, making 3 full iterations hash-exact. Top-10 uses
-    a (rank DESC, host) total order so the LIMIT cutoff is deterministic."""
+    a (rank DESC, host) total order so the LIMIT cutoff is deterministic.
+    The host count is a one-row aggregate inside the plan, never a
+    driver-side count."""
     from .queries import _pages_for_sf
 
-    pages = _pages_for_sf(spark, sf)
-    src = F.regexp_extract("url", r"https?://([^/]+)/", 1)
-    page_i = F.regexp_extract("url", r"([0-9]+)(\.pdf)?$", 1).try_cast("bigint")
-    links = pages.select(src.alias("src"), page_i.alias("i"))
-
-    def _dst(expr):
-        return F.concat(F.lit("host"), expr.cast("string"), F.lit(".example"))
-
     edges = (
-        links.select("src", _dst((F.col("i") * 7 + 1) % 50).alias("dst"))
-        .unionByName(links.select("src", _dst(F.col("i") % 10).alias("dst")))
-        .where(F.col("src") != F.col("dst"))
+        _host_links(_pages_for_sf(spark, sf))
         .groupBy("src", "dst")
         .agg(F.count("*").alias("w"))
         .persist()
@@ -2145,9 +2158,10 @@ def q_pagerank_hosts(spark, sf):
         .distinct()
         .persist()
     )
-    n = nodes.count()  # driver-side scalar (host count, not data-sized)
-    base = _PR_SCALE * 15 // (100 * n)
-    rank = nodes.select("host", F.lit(_PR_SCALE // n).alias("rank"))
+    n = F.broadcast(nodes.agg(F.count("*").alias("n")))
+    rank = nodes.crossJoin(n).select(
+        "host", F.expr(f"{_PR_SCALE} div n").alias("rank")
+    )
     # Join strategy is deliberately left to AQE: outw/rank/contrib are all
     # O(hosts) relations — tiny here (50 rows → runtime broadcast), but at
     # the real web's ~10^8 hosts they are NOT broadcastable and the same
@@ -2165,11 +2179,12 @@ def q_pagerank_hosts(spark, sf):
             .groupBy("host")
             .agg(F.sum("c").alias("m"))
         )
-        rank = nodes.join(contrib, "host", "left").select(
+        rank = nodes.join(contrib, "host", "left").crossJoin(n).select(
             "host",
-            (F.lit(base) + F.expr("coalesce(m, 0L) * 85 div 100")).alias(
-                "rank"
-            ),
+            F.expr(
+                f"{_PR_SCALE * 15} div (100 * n)"
+                " + coalesce(m, 0L) * 85 div 100"
+            ).alias("rank"),
         )
     return rank.orderBy(F.desc("rank"), "host").limit(10)
 
@@ -2198,19 +2213,8 @@ _PR_ITER_CTES = ",\n".join(
 )
 
 ORACLE_PAGERANK = f"""
-WITH links AS (
-  SELECT regexp_extract(url, 'https?://([^/]+)/', 1) AS src,
-         TRY_CAST(regexp_extract(url, '([0-9]+)(\\.pdf)?$', 1) AS BIGINT) AS i
-  FROM {_PAGES_REL}
-  WHERE {_PAGES_WHERE}
-), raw AS (
-  SELECT src, 'host' || CAST((i * 7 + 1) % 50 AS VARCHAR) || '.example' AS dst
-  FROM links
-  UNION ALL
-  SELECT src, 'host' || CAST(i % 10 AS VARCHAR) || '.example' AS dst
-  FROM links
-), edges AS (
-  SELECT src, dst, count(*) AS w FROM raw WHERE src <> dst GROUP BY 1, 2
+WITH {_HOST_LINKS_SQL}, edges AS (
+  SELECT src, dst, count(*) AS w FROM host_links GROUP BY 1, 2
 ), outw AS (
   SELECT src, CAST(sum(w) AS BIGINT) AS out_w FROM edges GROUP BY 1
 ), nodes AS (
@@ -2295,7 +2299,7 @@ def q_domain_cap_sample(spark, sf):
     from .queries import _pages_for_sf
 
     pages = _pages_for_sf(spark, sf)
-    host = F.regexp_extract("url", r"https?://([^/]+)/", 1)
+    host = url_host_col("url")
     keyed = pages.select(
         host.alias("host"), "url", _h60(F.col("url")).alias("key")
     )
@@ -2324,8 +2328,7 @@ ORACLE_DOMAIN_CAP = f"""
 WITH keyed AS (
   SELECT regexp_extract(url, 'https?://([^/]+)/', 1) AS host, url,
          {H60_SQL.format(x="url")} AS key
-  FROM {_PAGES_REL}
-  WHERE {_PAGES_WHERE}
+  {_PAGES_SRC}
 ), ranked AS (
   SELECT *, row_number() OVER (PARTITION BY host ORDER BY key, url) AS rn
   FROM keyed
@@ -2405,8 +2408,7 @@ WITH tagged AS (
          TRY_CAST(regexp_extract(url, '([0-9]+)(\\.pdf)?$', 1) AS BIGINT) % 2 = 0
              AS is_build,
          [{_BLOOM_POS_DUCK}] AS pos
-  FROM {_PAGES_REL}
-  WHERE {_PAGES_WHERE}
+  {_PAGES_SRC}
 ), bits AS (
   SELECT DISTINCT unnest(pos) AS bit FROM tagged WHERE is_build
 ), probe AS (
@@ -2440,16 +2442,6 @@ EXT_QUERIES.update(WEB_QUERIES_D)
 # global sentence dedup with text rebuild, template-link (boilerplate
 # anchor) discovery, per-url snapshot churn, extraction-yield host audit,
 # a SURT-keyed index scan, and a recrawl-frontier priority ranking.
-
-# shared DuckDB source CTE body for the synthetic pages table (same
-# glob + filename-size inference as the earlier page oracles)
-_PAGES_SRC = f"""
-  FROM read_parquet('/tmp/spark_graft_pages/pages_n*_s42_v3.parquet/*.parquet',
-                    filename=true)
-  WHERE filename LIKE
-        '%pages_n' || CAST({_N_PAGES_SQL} AS VARCHAR) || '_s42_v3.parquet%'
-"""
-
 
 def _first_occ_tagged(keyed, hot_df: int = 64):
     """Tag each (h, occ) row with its key's global first occurrence —
@@ -2612,7 +2604,7 @@ def q_anchor_link_stats(spark, sf):
     pages = _pages_for_sf(spark, sf)
     htmlish = pages.where(F.expr("startswith(html, X'3C')"))
     base = htmlish.select(
-        F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host"),
+        url_host_col("url").alias("host"),
         F.pmod(F.xxhash64("url"), F.lit(16)).alias("_salt"),
         F.expr(
             "regexp_extract_all(cast(html as string),"
@@ -2686,9 +2678,7 @@ def q_url_churn_stats(spark, sf):
     htmlish = pages.where(F.expr("startswith(html, X'3C')")).select(
         "url", "warc_ts", F.col("html").cast("string").alias("s")
     )
-    # try_cast: non-matching urls (e.g. ".pdf" suffixes) yield '' — must
-    # become NULL (then filtered), not CAST_INVALID_INPUT under ANSI
-    page_no = F.regexp_extract("url", r"([0-9]+)$", 1).try_cast("bigint")
+    page_no = url_page_no_col("url")
     re1 = htmlish.where(page_no % 3 == 0).select(
         "url",
         (F.col("warc_ts") + F.expr("INTERVAL 1 HOUR")).alias("warc_ts"),
@@ -2771,7 +2761,7 @@ def q_extraction_yield_by_host(spark, sf):
     htmlish = pages.where(F.expr("startswith(html, X'3C')"))
     s = F.col("html").cast("string")
     feat = htmlish.select(
-        F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host"),
+        url_host_col("url").alias("host"),
         F.pmod(F.xxhash64("url"), F.lit(16)).alias("_salt"),
         F.length(s).alias("hc"),
         F.length(F.regexp_replace(s, "<[^>]*>", "")).alias("tc"),
@@ -2831,7 +2821,7 @@ def q_surt_prefix_scan(spark, sf):
     from .queries import _pages_for_sf
 
     pages = _pages_for_sf(spark, sf).select("url", "warc_ts")
-    host = F.regexp_extract("url", r"^https?://([^/]+)", 1)
+    host = url_host_col("url")
     path = F.regexp_extract("url", r"^https?://[^/]+(.*)$", 1)
     surt = F.concat(
         F.array_join(F.reverse(F.split(host, r"\.")), ","), F.lit(")"), path
@@ -2880,12 +2870,12 @@ def q_recrawl_priority(spark, sf):
     churn = q_url_churn_stats(spark, sf)
     pages = _pages_for_sf(spark, sf)
     htmlish = pages.where(F.expr("startswith(html, X'3C')"))
-    host_pages = htmlish.groupBy(
-        F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host")
-    ).agg(F.count("*").alias("n_pages_host"))
-    withhost = churn.withColumn(
-        "host", F.regexp_extract("url", r"^https?://([^/]+)", 1)
-    ).join(F.broadcast(host_pages), "host")
+    host_pages = htmlish.groupBy(url_host_col("url").alias("host")).agg(
+        F.count("*").alias("n_pages_host")
+    )
+    withhost = churn.withColumn("host", url_host_col("url")).join(
+        F.broadcast(host_pages), "host"
+    )
     score = (F.col("churn_rate") + F.lit(0.1)) * F.col("n_pages_host")
     return (
         withhost.select(
@@ -2982,9 +2972,7 @@ def q_span3_dedup_stats(spark, sf):
     htmlish = pages.where(F.expr("startswith(html, X'3C')")).select(
         "url", F.col("html").cast("string").alias("s")
     )
-    # try_cast: non-matching urls (e.g. ".pdf" suffixes) yield '' — must
-    # become NULL (then filtered), not CAST_INVALID_INPUT under ANSI
-    page_no = F.regexp_extract("url", r"([0-9]+)$", 1).try_cast("bigint")
+    page_no = url_page_no_col("url")
     mirrors = htmlish.where(page_no % 5 == 0).select(
         F.concat(F.col("url"), F.lit("?mirror=1")).alias("url"), "s"
     )
@@ -3104,50 +3092,27 @@ def _url_rule_sql(u: str) -> str:
 
 def q_outlink_frontier(spark, sf):
     """EXACT crawl-frontier discovery: resolve every same-site `<a href>`
-    to an absolute url, gate it with the shared URL-filter rule (the same
-    zeroth-tier admission the STREAMING frontier applies —
-    streaming/frontier.py:outlink_candidates — so batch and stream admit
-    identically by construction), and anti-join against the crawled set —
-    the urls a crawler has discovered but never fetched, per host. This is
-    the precise companion to bloom_url_seen: the Bloom filter answers the
-    frontier-membership question approximately with a broadcast bit set;
-    this query answers it exactly with a co-partitioned anti-join, which
-    is what the frontier *builder* (as opposed to the hot-path probe)
-    runs.
+    to an absolute url, gate it with the shared URL-filter rule, and
+    anti-join against the crawled set — the urls a crawler has discovered
+    but never fetched, per host. The candidates come from
+    streaming/frontier.outlink_candidates, the function the STREAMING
+    frontier runs per micro-batch, so batch and stream resolve and admit
+    urls with the same code. This is the precise companion to
+    bloom_url_seen: the Bloom filter answers the frontier-membership
+    question approximately with a broadcast bit set; this query answers it
+    exactly with a co-partitioned anti-join, which is what the frontier
+    *builder* (as opposed to the hot-path probe) runs.
 
     Scale shape: the explode→distinct shuffles on out_url (uniform — url
     strings hash well even when hosts are skewed); the LeftAnti join then
     reuses the same url-hash partitioning against the crawled-set scan, so
     the expensive side shuffles once. The per-host rollup is a tiny keyed
     agg."""
+    from ..streaming.frontier import outlink_candidates
     from .queries import _pages_for_sf
 
     pages = _pages_for_sf(spark, sf)
-    htmlish = pages.where(F.expr("startswith(html, X'3C')"))
-    host = F.regexp_extract("url", r"^https?://([^/]+)", 1)
-    out = (
-        htmlish.select(
-            host.alias("host"),
-            F.explode(
-                F.expr(
-                    "regexp_extract_all(cast(html as string),"
-                    " '<a href=\"([^\"]+)\"', 1)"
-                )
-            ).alias("href"),
-        )
-        .where(F.col("href").startswith("/"))
-        .select(
-            "host",
-            F.concat(F.lit("https://"), F.col("host"), F.col("href")).alias(
-                "out_url"
-            ),
-        )
-    )
-    from ..functions.columns import url_filter_rule_col
-
-    out = out.where(
-        url_filter_rule_col(F.col("out_url")) == "pass"
-    ).distinct()
+    out = outlink_candidates(pages).select("host", "out_url").distinct()
     crawled = pages.select(F.col("url").alias("out_url"))
     frontier = out.join(crawled, "out_url", "left_anti")
     return frontier.groupBy("host").agg(
@@ -3206,9 +3171,7 @@ def q_crawl_diff(spark, sf):
     pages = _pages_for_sf(spark, sf).select(
         "url", F.md5(F.hex("html")).alias("h")
     )
-    # try_cast: non-matching urls (e.g. ".pdf" suffixes) yield '' — must
-    # become NULL (then filtered), not CAST_INVALID_INPUT under ANSI
-    page_no = F.regexp_extract("url", r"([0-9]+)$", 1).try_cast("bigint")
+    page_no = url_page_no_col("url")
     crawl_b = (
         pages.where(page_no % 7 != 0)
         .select(
@@ -3236,7 +3199,7 @@ def q_crawl_diff(spark, sf):
     )
     return (
         joined.select(
-            F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host"),
+            url_host_col("url").alias("host"),
             status.alias("status"),
         )
         .groupBy("host", "status")
@@ -3297,14 +3260,12 @@ def q_url_filter_gate(spark, sf):
     agg — scan-bound, zero joins, zero Python."""
     from .queries import _pages_for_sf
 
-    from ..functions.columns import url_filter_rule_col
-
     probes = spark.createDataFrame([(u,) for u in _URL_PROBES], "url string")
     pages = _pages_for_sf(spark, sf).select("url").unionByName(probes)
     rule = url_filter_rule_col(F.col("url"))
     return (
         pages.select(
-            F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host"),
+            url_host_col("url").alias("host"),
             rule.alias("rule"),
         )
         .groupBy("rule")
@@ -3489,7 +3450,7 @@ def q_politeness_audit(spark, sf):
     )
     per_bucket = (
         pages.select(
-            F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host"),
+            url_host_col("url").alias("host"),
             bucket.alias("bucket"),
         )
         .groupBy("host", "bucket")
@@ -3558,7 +3519,7 @@ def q_robots_compliance(spark, sf):
     from .queries import _pages_for_sf
 
     pages = _pages_for_sf(spark, sf).select("url")
-    host = F.regexp_extract("url", r"^https?://([^/]+)", 1)
+    host = url_host_col("url")
     withhost = pages.select("url", host.alias("host"))
     hosts = withhost.select("host").distinct()
     m3 = F.pmod(
@@ -3655,7 +3616,7 @@ def q_image_ocr_native(spark, sf):
     imgs = pages.where(
         F.expr("startswith(html, X'89504E470D0A1A0A')")
     ).select(
-        F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host"),
+        url_host_col("url").alias("host"),
         F.expr("substring(html, 17, 2147483647)").cast("string").alias("t"),
     )
     return (
@@ -4164,20 +4125,8 @@ def q_hits_hosts(spark, sf):
     O(hosts) graph."""
     from .queries import _pages_for_sf
 
-    pages = _pages_for_sf(spark, sf)
-    src = F.regexp_extract("url", r"https?://([^/]+)/", 1)
-    page_i = F.regexp_extract("url", r"([0-9]+)(\.pdf)?$", 1).try_cast(
-        "bigint"
-    )
-    links = pages.select(src.alias("src"), page_i.alias("i"))
-
-    def _dst(expr):
-        return F.concat(F.lit("host"), expr.cast("string"), F.lit(".example"))
-
     edges = (
-        links.select("src", _dst((F.col("i") * 7 + 1) % 50).alias("dst"))
-        .unionByName(links.select("src", _dst(F.col("i") % 10).alias("dst")))
-        .where(F.col("src") != F.col("dst"))
+        _host_links(_pages_for_sf(spark, sf))
         .groupBy("src", "dst")
         .agg(F.count("*").alias("w"))
         .localCheckpoint(eager=True)
@@ -4239,19 +4188,8 @@ def _hits_rescale_cte(raw_cte: str, out_cte: str, col: str) -> str:
 
 
 ORACLE_HITS = f"""
-WITH links AS (
-  SELECT regexp_extract(url, 'https?://([^/]+)/', 1) AS src,
-         TRY_CAST(regexp_extract(url, '([0-9]+)(\\.pdf)?$', 1) AS BIGINT) AS i
-  FROM {_PAGES_REL}
-  WHERE {_PAGES_WHERE}
-), raw AS (
-  SELECT src, 'host' || CAST((i * 7 + 1) % 50 AS VARCHAR) || '.example' AS dst
-  FROM links
-  UNION ALL
-  SELECT src, 'host' || CAST(i % 10 AS VARCHAR) || '.example' AS dst
-  FROM links
-), edges AS (
-  SELECT src, dst, count(*) AS w FROM raw WHERE src <> dst GROUP BY 1, 2
+WITH {_HOST_LINKS_SQL}, edges AS (
+  SELECT src, dst, count(*) AS w FROM host_links GROUP BY 1, 2
 ), nodes AS (
   SELECT src AS host FROM edges UNION SELECT dst FROM edges
 ), h0 AS (
@@ -4594,9 +4532,7 @@ def q_rendezvous_shard_assign(spark, sf):
         _h60(F.concat(F.col("url"), F.lit(f"#s{s}"))).alias(f"h{s}")
         for s in range(_RV_SHARDS)
     ]
-    with_h = pages.select(
-        F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host"), *hs
-    )
+    with_h = pages.select(url_host_col("url").alias("host"), *hs)
     m = F.greatest(*[F.col(f"h{s}") for s in range(_RV_SHARDS)])
     shard = F.coalesce(
         *[
@@ -4765,9 +4701,7 @@ def q_crawl_budget_allocation(spark, sf):
 
     pages = _pages_for_sf(spark, sf)
     pend = (
-        pages.select(
-            F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host")
-        )
+        pages.select(url_host_col("url").alias("host"))
         .groupBy("host")
         .agg(F.count("*").alias("pending"))
     )
@@ -4873,7 +4807,7 @@ def q_scd2_url_history(spark, sf):
     pages = _pages_for_sf(spark, sf).select(
         "url", "warc_ts", F.md5(F.hex("html")).alias("ck")
     )
-    page_no = F.regexp_extract("url", r"([0-9]+)$", 1).try_cast("bigint")
+    page_no = url_page_no_col("url")
     changed = pages.where(page_no % 3 == 0).select(
         "url",
         (F.col("warc_ts") + F.expr("INTERVAL 1 HOUR")).alias("warc_ts"),
@@ -5078,20 +5012,8 @@ def q_crawl_depth_bfs(spark, sf):
     shuffle is graph-sized, never corpus-sized."""
     from .queries import _pages_for_sf
 
-    pages = _pages_for_sf(spark, sf)
-    src = F.regexp_extract("url", r"https?://([^/]+)/", 1)
-    page_i = F.regexp_extract("url", r"([0-9]+)(\.pdf)?$", 1).try_cast(
-        "bigint"
-    )
-    links = pages.select(src.alias("src"), page_i.alias("i"))
-
-    def _dst(expr):
-        return F.concat(F.lit("host"), expr.cast("string"), F.lit(".example"))
-
     edges = (
-        links.select("src", _dst((F.col("i") * 7 + 1) % 50).alias("dst"))
-        .unionByName(links.select("src", _dst(F.col("i") % 10).alias("dst")))
-        .where(F.col("src") != F.col("dst"))
+        _host_links(_pages_for_sf(spark, sf))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -5138,18 +5060,8 @@ _BFS_ITER_CTES = ",\n".join(
 )
 
 ORACLE_BFS = f"""
-WITH links AS (
-  SELECT regexp_extract(url, 'https?://([^/]+)/', 1) AS src,
-         TRY_CAST(regexp_extract(url, '([0-9]+)(\\.pdf)?$', 1) AS BIGINT) AS i
-  {_PAGES_SRC}
-), raw AS (
-  SELECT src, 'host' || CAST((i * 7 + 1) % 50 AS VARCHAR) || '.example' AS dst
-  FROM links
-  UNION ALL
-  SELECT src, 'host' || CAST(i % 10 AS VARCHAR) || '.example' AS dst
-  FROM links
-), edges AS (
-  SELECT DISTINCT src, dst FROM raw WHERE src <> dst
+WITH {_HOST_LINKS_SQL}, edges AS (
+  SELECT DISTINCT src, dst FROM host_links
 ), nodes AS (
   SELECT src AS host FROM edges UNION SELECT dst FROM edges
 ), d0 AS (
@@ -5563,7 +5475,7 @@ def q_etld1_registrable(spark, sf):
 
     pages = _pages_for_sf(spark, sf)
     base = pages.select(
-        F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host0"),
+        url_host_col("url").alias("host0"),
         F.regexp_extract("url", r"([0-9]+)(\.pdf)?$", 1)
         .try_cast("bigint")
         .alias("i"),
@@ -5666,23 +5578,8 @@ def q_host_triangle_count(spark, sf):
     triangle density is the classic spam-farm / link-ring signal."""
     from .queries import _pages_for_sf
 
-    pages = _pages_for_sf(spark, sf)
-    src = F.regexp_extract("url", r"https?://([^/]+)/", 1)
-    page_i = F.regexp_extract("url", r"([0-9]+)(\.pdf)?$", 1).try_cast(
-        "bigint"
-    )
-    links = pages.select(src.alias("s"), page_i.alias("i"))
-
-    def _dst(expr):
-        return F.concat(F.lit("host"), expr.cast("string"), F.lit(".example"))
-
-    directed = (
-        links.select("s", _dst((F.col("i") * 7 + 1) % 50).alias("d"))
-        .unionByName(links.select("s", _dst(F.col("i") % 10).alias("d")))
-        .where(F.col("s") != F.col("d"))
-    )
-    und = directed.select(
-        F.least("s", "d").alias("a"), F.greatest("s", "d").alias("b")
+    und = _host_links(_pages_for_sf(spark, sf)).select(
+        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
     ).distinct()
     deg = (
         und.select(F.col("a").alias("v"))
@@ -5726,20 +5623,9 @@ def q_host_triangle_count(spark, sf):
 
 
 ORACLE_TRIANGLES = f"""
-WITH links AS (
-  SELECT regexp_extract(url, 'https?://([^/]+)/', 1) AS s,
-         TRY_CAST(regexp_extract(url, '([0-9]+)(\\.pdf)?$', 1) AS BIGINT)
-           AS i
-  {_PAGES_SRC}
-), raw AS (
-  SELECT s, 'host' || CAST((i * 7 + 1) % 50 AS VARCHAR) || '.example' AS d
-  FROM links
-  UNION ALL
-  SELECT s, 'host' || CAST(i % 10 AS VARCHAR) || '.example' AS d
-  FROM links
-), und AS (
-  SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-  FROM raw WHERE s <> d
+WITH {_HOST_LINKS_SQL}, und AS (
+  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+  FROM host_links
 ), deg AS (
   SELECT v, count(*) AS deg FROM (
     SELECT a AS v FROM und UNION ALL SELECT b FROM und
@@ -5884,7 +5770,7 @@ def q_morton_layout_keys(spark, sf):
 
     pages = _pages_for_sf(spark, sf)
     dims = pages.select(
-        (F.pmod(_h60(F.regexp_extract("url", r"^https?://([^/]+)", 1)),
+        (F.pmod(_h60(url_host_col("url")),
                 F.lit(1 << _MORTON_BITS))).alias("hx"),
         F.pmod(
             F.floor(
@@ -6285,7 +6171,7 @@ def q_pages_gen_probe(spark, sf):
         .option("numPartitions", 8)
         .load()
     )
-    host = F.regexp_extract("url", r"https?://([^/]+)/", 1)
+    host = url_host_col("url")
     return df.groupBy("lang").agg(
         F.count("*").cast("bigint").alias("n_pages"),
         F.countDistinct(host).cast("bigint").alias("n_hosts"),
@@ -6736,13 +6622,13 @@ def q_host_mix_shift(spark, sf):
     from .queries import _pages_for_sf
 
     pages = _pages_for_sf(spark, sf).select("url")
-    page_no = F.regexp_extract("url", r"([0-9]+)$", 1).try_cast("bigint")
+    page_no = url_page_no_col("url")
     crawl_b = pages.where(page_no % 7 != 0).unionByName(
         pages.where(page_no % 11 == 0).select(
             F.concat(F.col("url"), F.lit("/new")).alias("url")
         )
     )
-    host = F.regexp_extract("url", r"^https?://([^/]+)", 1)
+    host = url_host_col("url")
 
     def host_counts(df, col):
         return df.select(host.alias("host")).groupBy("host").agg(

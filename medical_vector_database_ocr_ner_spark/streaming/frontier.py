@@ -1,5 +1,6 @@
 """Streaming crawl-frontier builder: the continuous form of the batch
-outlink-frontier query (plans/queries_ext.q_outlink_frontier).
+outlink-frontier query (plans/queries_ext.q_outlink_frontier), which
+builds its candidates with this module's ``outlink_candidates``.
 
 As crawled pages stream in, every same-site ``<a href>`` is resolved to
 an absolute url, gated by the shared URL filter rule (the zeroth curation
@@ -22,7 +23,7 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from ..functions.columns import url_filter_rule_col
+from ..functions.columns import url_filter_rule_col, url_host_col
 
 PAGES_SCHEMA_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -30,15 +31,15 @@ PAGES_SCHEMA_DDL = (
 
 
 def outlink_candidates(stream):
-    """pages stream → (host, out_url, warc_ts) candidate stream: same-site
-    hrefs resolved absolute, inadmissible urls dropped by the shared gate
-    rule. All native expressions — explode, regexp, CASE — so the stream's
-    per-batch plan is one codegen span over the micro-batch scan."""
+    """pages → (host, out_url, warc_ts) candidates: same-site hrefs
+    resolved absolute, inadmissible urls dropped by the shared gate rule.
+    Works on a stream or a batch DataFrame alike. All native expressions —
+    explode, regexp, CASE — so a stream's per-batch plan is one codegen
+    span over the micro-batch scan."""
     htmlish = stream.where(F.expr("startswith(html, X'3C')"))
-    host = F.regexp_extract("url", r"^https?://([^/]+)", 1)
     out = (
         htmlish.select(
-            host.alias("host"),
+            url_host_col(F.col("url")).alias("host"),
             F.col("warc_ts"),
             F.explode(
                 F.expr(

@@ -47,6 +47,28 @@ class TestPagerankHosts:
             (r["host"], r["rank"]) for r in rows
         ]
 
+    def test_builds_without_a_job(self, spark, sf001_dir, monkeypatch):
+        """pagerank_hosts is one lazy plan: the host count is an
+        aggregate inside the plan, so building it launches no Spark job
+        (it used to count the nodes on the driver). The pages scan is
+        opened up front: reading a parquet directory runs its own
+        listing job."""
+        from medical_vector_database_ocr_ner_spark.plans import queries
+
+        pages = queries._pages_for_sf(spark, sf001_dir)
+        monkeypatch.setattr(queries, "_pages_for_sf", lambda s, sf: pages)
+        sc = spark.sparkContext
+        group = "lazy-pagerank-hosts"
+        sc.setJobGroup(group, "plan build only")
+        try:
+            df = q_pagerank_hosts(spark, sf001_dir)
+            launched = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert launched == []
+        assert len(df.collect()) == 10
+
     def test_mass_approximately_conserved(self, spark, sf001_dir):
         """Integer truncation only ever LOSES mass (floor division), and
         per-iteration loss is bounded by ~1 unit per edge + per node —

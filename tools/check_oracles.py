@@ -89,7 +89,14 @@ def main() -> None:
     from medical_vector_database_ocr_ner_spark.plans.queries import QUERIES
     from medical_vector_database_ocr_ner_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=16)
+    # no console progress bar: it writes "[Stage N:>…]" and carriage
+    # returns to stderr, which land inside the "ok" lines when stdout and
+    # stderr share a file
+    spark = get_spark(
+        master="local[8]",
+        shuffle_partitions=16,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     # The driver runs Spark 4's default ANSI-on session. The gate MUST run
     # the same config — round 3 shipped three CAST_INVALID_INPUT failures
     # because a non-ANSI builder session measured "97/97 green".
