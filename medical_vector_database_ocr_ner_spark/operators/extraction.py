@@ -66,6 +66,15 @@ PAGE_TYPE = StructType(
 )
 
 
+def stage_width(spark) -> int:
+    """Partition count of a CPU-bound Python stage: 4× the default
+    parallelism. Per-document cost is skewed (PDFs, giant pages), so
+    several small waves balance far better than one task per core
+    (measured: +50% throughput at 32 cores vs 1×; see BENCH.md). The
+    extraction stage and the embedding stage both run this wide."""
+    return 4 * spark.sparkContext.defaultParallelism
+
+
 def map_rows(df: "DataFrame", schema: StructType, reads, row, init) -> "DataFrame":
     """Run ``row`` once per row of ``df`` in ONE ``mapInPandas`` pass.
 
@@ -178,7 +187,7 @@ def extract_documents(
     OCR/NER/HTML models into the Python stage (factories initialize once
     per worker — see core/models.py for the tesseract/spaCy drop-in).
     ``num_partitions``: the url-hash partition count of the Python stage
-    (default 4× the default parallelism).
+    (default ``stage_width``).
 
     Stage order is deliberate (SURVEY.md §4.2), and the whole DAG is ONE
     scan of the input (a quarantine-side union would scan twice — 2× IO at
@@ -220,10 +229,7 @@ def extract_documents(
     )
 
     if num_partitions is None:
-        # 4× cores: per-document cost is skewed (PDFs, giant pages), so
-        # several small waves balance far better than one task per core
-        # (measured: +50% throughput at 32 cores vs 1×; see BENCH.md)
-        num_partitions = 4 * routed.sparkSession.sparkContext.defaultParallelism
+        num_partitions = stage_width(routed.sparkSession)
     # hash-repartition on the FULL url: every row is hashed independently,
     # so host-level skew cannot survive. (Partitioning on a precomputed
     # pmod(xxhash64(url), N) salt column is WORSE: Spark re-hashes the N

@@ -12,7 +12,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import functions as F
 
 from ..functions import columns as FX
-from ..operators.extraction import make_embed_udf
+from ..operators.extraction import make_embed_udf, stage_width
 from ..operators.similarity import dot_lit
 
 if TYPE_CHECKING:
@@ -30,6 +30,16 @@ def build_embeddings(
     ``dropDuplicates(content_hash)`` guarantees each distinct document text
     embeds exactly once, which is strictly more scalable than a TTL cache.
     The sink is keyed by content hash (north_star bulk write).
+
+    Width: the dedup hash-partitions on ``vec_id`` with an explicit count,
+    ``stage_width`` (the extraction stage's width), instead of the
+    aggregate's own shuffle. AQE sizes that shuffle by bytes, and the
+    projected rows are a few MB, so it coalesced them to ONE partition:
+    the embedding UDF (CPU-bound, the costliest ``core`` layer) ran on
+    one core and the sink was one file with one row group, which every
+    search then scored as one task. A ``REPARTITION_BY_NUM`` exchange is
+    never coalesced, the dedup reuses its partitioning (no third
+    exchange), and the UDF and the sink write run that wide too.
 
     carry_cols: extra document columns to ride along (one value per
     content hash). When the search result needs hydration and the
@@ -70,6 +80,7 @@ def build_embeddings(
             entity_types.alias("entity_types"),
             *[F.col(c) for c in (carry_cols or [])],
         )
+        .repartition(stage_width(documents.sparkSession), "vec_id")
         .dropDuplicates(["vec_id"])
     )
     return unique.withColumn(

@@ -1372,7 +1372,10 @@ DRIVER_PRIORITY: list[str] = [
     # matchers of core.ner and the lazy tag paths of core.html_extract's
     # block scan (after the one-pass tokenizer and the memoised
     # word_confidence in core.ocr); semantic_search also ranks with
-    # similarity.dot
+    # similarity.dot, and its helper plans.pipeline.build_embeddings now
+    # hash-partitions the vec_id dedup at operators.extraction.stage_width
+    # (which row of a duplicated vec_id is kept may change; every vec_id of
+    # its top-10 has one url at sf0.001, sf0.01 and sf0.1)
     "semantic_search",
     "pages_extraction",
     "multimodal_image_features",

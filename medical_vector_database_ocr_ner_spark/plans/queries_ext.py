@@ -4179,7 +4179,7 @@ def q_hits_hosts(spark, sf):
 
 
 def _hits_rescale_cte(raw_cte: str, out_cte: str, col: str) -> str:
-    return f"""{out_cte} AS (
+    return f"""{out_cte} AS MATERIALIZED (
   SELECT host,
          raw // greatest((SELECT sum(raw) FROM {raw_cte}) // {_HITS_SCALE},
                          1) AS {col}
@@ -4187,23 +4187,27 @@ def _hits_rescale_cte(raw_cte: str, out_cte: str, col: str) -> str:
 )"""
 
 
+# Every CTE of the chain is MATERIALIZED: a rescale reads its raw CTE twice
+# and a raw CTE reads the previous rescale, so inlined CTEs re-evaluate the
+# whole chain below each level (DuckDB 1.0.0 on 4 cores, sf0.001 and sf0.01:
+# 32–37 s inlined, 0.1–0.2 s materialized, identical rows).
 ORACLE_HITS = f"""
-WITH {_HOST_LINKS_SQL}, edges AS (
+WITH {_HOST_LINKS_SQL}, edges AS MATERIALIZED (
   SELECT src, dst, count(*) AS w FROM host_links GROUP BY 1, 2
-), nodes AS (
+), nodes AS MATERIALIZED (
   SELECT src AS host FROM edges UNION SELECT dst FROM edges
-), h0 AS (
+), h0 AS MATERIALIZED (
   SELECT host, {_HITS_SCALE} AS h FROM nodes
-), a1_raw AS (
+), a1_raw AS MATERIALIZED (
   SELECT e.dst AS host, sum(e.w * h0.h) AS raw
   FROM edges e JOIN h0 ON h0.host = e.src GROUP BY 1
-), {_hits_rescale_cte("a1_raw", "a1", "a")}, h1_raw AS (
+), {_hits_rescale_cte("a1_raw", "a1", "a")}, h1_raw AS MATERIALIZED (
   SELECT e.src AS host, sum(e.w * a1.a) AS raw
   FROM edges e JOIN a1 ON a1.host = e.dst GROUP BY 1
-), {_hits_rescale_cte("h1_raw", "h1", "h")}, a2_raw AS (
+), {_hits_rescale_cte("h1_raw", "h1", "h")}, a2_raw AS MATERIALIZED (
   SELECT e.dst AS host, sum(e.w * h1.h) AS raw
   FROM edges e JOIN h1 ON h1.host = e.src GROUP BY 1
-), {_hits_rescale_cte("a2_raw", "a2", "a")}, h2_raw AS (
+), {_hits_rescale_cte("a2_raw", "a2", "a")}, h2_raw AS MATERIALIZED (
   SELECT e.src AS host, sum(e.w * a2.a) AS raw
   FROM edges e JOIN a2 ON a2.host = e.dst GROUP BY 1
 ), {_hits_rescale_cte("h2_raw", "h2", "h")}

@@ -5,7 +5,15 @@
 plans.pipeline) per micro-batch, and performs the content-hash-keyed
 embedding upsert — the streaming form of the reference's embedding cache
 (vector_service.py:293-319): a hash already present in the sink is never
-re-embedded."""
+re-embedded.
+
+Each micro-batch appends one embeddings file per non-empty partition of
+``build_embeddings``' ``vec_id`` dedup, which runs at ``stage_width`` (4×
+the default parallelism): on local[4], the 200-page test table's single
+micro-batch writes 16 files (196 vectors), and a re-ingest whose every
+hash is already present writes one empty file. A long-running ingest
+therefore accretes small files; ``sources/compact.py`` (``compact_dir``)
+bin-packs the directory back to a target file size."""
 
 from __future__ import annotations
 
