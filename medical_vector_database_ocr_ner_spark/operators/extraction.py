@@ -15,6 +15,9 @@ Design for 100 TB (SURVEY.md §3.3/§4.2):
   mirroring the reference's lru_cache model singletons,
   app/services/vector_service.py:46-52), and the worker's archive finders
   drop after the last batch (core/models.py).
+- ``embed_unique`` is the embedding stage: the dedup on ``vec_id`` and
+  the embedding in one ``mapInArrow`` pass, so neither holds a Tungsten
+  page.
 - Per-row failures become ``status='failed'`` + error_message rows, the
   quarantine side-output of reference scripts/batch_process.py:115-126.
 """
@@ -163,6 +166,60 @@ def make_embed_udf(seam=None):
         )
 
     return pandas_udf(ArrayType(FloatType()))(_embed)
+
+
+def embed_unique(
+    df: "DataFrame", key: str, text: str, seam=None
+) -> "DataFrame":
+    """The first row of each ``key`` in its partition, with ``embedding``
+    (the seam's float32 vector of ``text``) appended, in ONE
+    ``mapInArrow`` pass. ``df`` must be hash-partitioned on ``key``, so
+    all rows of a key meet in one partition; the row kept is the one
+    ``dropDuplicates([key])`` keeps over that partitioning, the key's
+    first in partition order.
+
+    Neither step takes Tungsten memory. ``dropDuplicates`` sorts each
+    partition for its aggregate, and a scalar pandas UDF buffers its
+    input rows in a row queue. Each takes one page per task: 64 MB with
+    the package's 8g heap, however few rows the task holds. At 4
+    concurrent tasks that was 512 MB of humongous arrays, still in the
+    old generation after the stage, and G1 grew the heap around them by
+    a different amount each run (BENCH.md, round 11). Here the other
+    columns pass through as Arrow arrays, untouched, and the seam
+    resolves once per partition."""
+    import numpy as np
+
+    schema = StructType(
+        [*df.schema.fields, StructField("embedding", ArrayType(FloatType()))]
+    )
+
+    def run(batches):
+        import pyarrow as pa
+
+        from ..core.models import DEFAULT_SEAM, drop_archive_finders
+
+        models = (seam or DEFAULT_SEAM).resolve()
+        seen: set = set()
+        for batch in batches:
+            first = []
+            for i, k in enumerate(batch.column(key).to_pylist()):
+                if k not in seen:
+                    seen.add(k)
+                    first.append(i)
+            batch = batch.take(pa.array(first, pa.int64()))
+            vecs = [
+                np.asarray(models.embed(t or ""), dtype=np.float32)
+                for t in batch.column(text).to_pylist()
+            ]
+            offsets = np.cumsum([0, *map(len, vecs)], dtype=np.int32)
+            values = np.concatenate(vecs) if vecs else np.empty(0, np.float32)
+            embedding = pa.ListArray.from_arrays(pa.array(offsets), pa.array(values))
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, embedding], names=schema.names
+            )
+        drop_archive_finders()
+
+    return df.mapInArrow(run, schema=schema)
 
 
 @pandas_udf(ArrayType(PAGE_TYPE))

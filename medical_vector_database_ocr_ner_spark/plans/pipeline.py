@@ -12,7 +12,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import functions as F
 
 from ..functions import columns as FX
-from ..operators.extraction import make_embed_udf, stage_width
+from ..operators.extraction import embed_unique, stage_width
 from ..operators.similarity import dot_lit
 
 if TYPE_CHECKING:
@@ -27,19 +27,21 @@ def build_embeddings(
 
     Scale shape (SURVEY.md §4.2 #4): the reference's per-text embedding
     cache (vector_service.py:293-319) becomes dedup-before-compute —
-    ``dropDuplicates(content_hash)`` guarantees each distinct document text
-    embeds exactly once, which is strictly more scalable than a TTL cache.
-    The sink is keyed by content hash (north_star bulk write).
+    one row per content hash is kept before the embedding runs, so each
+    distinct document text embeds exactly once, which is strictly more
+    scalable than a TTL cache. The sink is keyed by content hash
+    (north_star bulk write).
 
-    Width: the dedup hash-partitions on ``vec_id`` with an explicit count,
-    ``stage_width`` (the extraction stage's width), instead of the
-    aggregate's own shuffle. AQE sizes that shuffle by bytes, and the
-    projected rows are a few MB, so it coalesced them to ONE partition:
-    the embedding UDF (CPU-bound, the costliest ``core`` layer) ran on
-    one core and the sink was one file with one row group, which every
-    search then scored as one task. A ``REPARTITION_BY_NUM`` exchange is
-    never coalesced, the dedup reuses its partitioning (no third
-    exchange), and the UDF and the sink write run that wide too.
+    Width: the rows hash-partition on ``vec_id`` with an explicit count,
+    ``stage_width`` (the extraction stage's width). An aggregate's own
+    shuffle would be sized by AQE by bytes, and the projected rows are a
+    few MB, so it coalesced them to ONE partition: the embedding
+    (CPU-bound, the costliest ``core`` layer) ran on one core and the
+    sink was one file with one row group, which every search then scored
+    as one task. A ``REPARTITION_BY_NUM`` exchange is never coalesced.
+    The dedup and the embedding run in one Python pass over that
+    partitioning (``operators.extraction.embed_unique``), with no third
+    exchange, and the sink write runs that wide too.
 
     carry_cols: extra document columns to ride along (one value per
     content hash). When the search result needs hydration and the
@@ -73,19 +75,13 @@ def build_embeddings(
         )
     )
 
-    unique = (
-        completed.select(
-            F.col("content_hash").alias("vec_id"),
-            doc_text.alias("doc_text"),
-            entity_types.alias("entity_types"),
-            *[F.col(c) for c in (carry_cols or [])],
-        )
-        .repartition(stage_width(documents.sparkSession), "vec_id")
-        .dropDuplicates(["vec_id"])
-    )
-    return unique.withColumn(
-        "embedding", make_embed_udf(models)(F.col("doc_text"))
-    )
+    rows = completed.select(
+        F.col("content_hash").alias("vec_id"),
+        doc_text.alias("doc_text"),
+        entity_types.alias("entity_types"),
+        *[F.col(c) for c in (carry_cols or [])],
+    ).repartition(stage_width(documents.sparkSession), "vec_id")
+    return embed_unique(rows, "vec_id", "doc_text", models)
 
 
 def search_topk(

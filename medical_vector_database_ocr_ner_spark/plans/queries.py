@@ -1373,7 +1373,8 @@ DRIVER_PRIORITY: list[str] = [
     # block scan (after the one-pass tokenizer and the memoised
     # word_confidence in core.ocr); semantic_search also ranks with
     # similarity.dot, and its helper plans.pipeline.build_embeddings now
-    # hash-partitions the vec_id dedup at operators.extraction.stage_width
+    # hash-partitions its rows on vec_id at operators.extraction.stage_width
+    # and dedups and embeds them in operators.extraction.embed_unique
     # (which row of a duplicated vec_id is kept may change; every vec_id of
     # its top-10 has one url at sf0.001, sf0.01 and sf0.1)
     "semantic_search",

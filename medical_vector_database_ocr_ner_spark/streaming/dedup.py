@@ -1,7 +1,7 @@
 """Streaming deduplication within a watermark horizon.
 
-The batch pipeline dedups embeddings by content hash with
-``dropDuplicates`` (plans/pipeline.py); the streaming form can't keep
+The batch pipeline dedups embeddings by content hash in its embedding
+pass (``operators.extraction.embed_unique``); the streaming form can't keep
 every hash ever seen in state — at 10^12 documents that state is the
 corpus. ``dropDuplicatesWithinWatermark`` bounds state to the watermark
 horizon: a re-crawl of the same page arriving within the horizon is

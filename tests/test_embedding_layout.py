@@ -1,10 +1,10 @@
 """Width of the embedding stage and of the sink it writes.
 
-``build_embeddings`` hash-partitions its ``vec_id`` dedup at
-``stage_width`` (the extraction stage's width). AQE would coalesce the
-dedup's own few-MB shuffle to one partition by bytes, leaving the
-embedding UDF on one core, the sink as one file with one row group and
-every search over it as one task."""
+``build_embeddings`` hash-partitions its rows on ``vec_id`` at
+``stage_width`` (the extraction stage's width) before its dedup and
+embedding pass. AQE would coalesce a dedup's own few-MB shuffle to one
+partition by bytes, leaving the embedding on one core, the sink as one
+file with one row group and every search over it as one task."""
 
 import glob
 import os

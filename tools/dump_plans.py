@@ -22,8 +22,8 @@ SELECTED = [
      "salted Exchange BELOW MapInPandas — cheap codegen work runs before "
      "bytes move or reach Python."),
     ("semantic_search",
-     "Exactly one MapInPandas (single extraction pass), one ArrowEvalPython "
-     "(embed after dropDuplicates), TakeOrderedAndProject top-k."),
+     "Exactly one MapInPandas (single extraction pass), one MapInArrow "
+     "(first row per vec_id, then embed), TakeOrderedAndProject top-k."),
     ("knn_hydrated",
      "JVM-side dot product, TakeOrderedAndProject, broadcast hydration "
      "join."),
