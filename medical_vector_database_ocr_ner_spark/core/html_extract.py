@@ -35,6 +35,8 @@ from html import unescape
 from html.parser import HTMLParser, starttagopen as _STARTTAG_OPEN
 import re
 
+from .textops import strip_control_chars
+
 # elements whose text is never content
 _SKIP_TAGS = frozenset({"script", "style", "noscript", "template", "svg", "head"})
 # ancestors that mark a block as boilerplate
@@ -312,10 +314,6 @@ def html_blocks(html: bytes | str) -> list[Block]:
     ]
 
 
-# strip set per reference app/models/document.py:177-188
-_CONTROL_RE = re.compile(r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]")
-
-
 def extract_main_content(html: bytes | str) -> str:
     """Main-content text: newline-joined content blocks, control chars
     stripped. This string is the byte-parity surface per url. It reads the
@@ -325,4 +323,4 @@ def extract_main_content(html: bytes | str) -> str:
         for text, _, n_link_chars, _, _, boiler in _scan(_decode(html))
         if _is_content(len(text), n_link_chars, boiler)
     )
-    return _CONTROL_RE.sub("", text)
+    return strip_control_chars(text)

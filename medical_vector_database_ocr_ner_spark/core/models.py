@@ -21,7 +21,7 @@ factories, once per partition otherwise:
         html_factory=None,                 # keep the built-in DOM classifier
     )
     docs = extract_documents(pages, models=seam)
-    docs = docs.withColumn("embedding", make_embed_udf(seam)(F.col("extracted_text")))
+    emb = build_embeddings(docs, models=seam)
 
 Factory contract:
 - ocr_factory() -> Callable[[bytes], list[tuple[str, float]]]   (page, conf)
@@ -46,17 +46,13 @@ entries), the ``spark-core`` jar on the worker path (2 × 31–36 ms, 5,359
 entries) and py4j. That is about 170–260 ms per task before any document
 is read; on a 4-core host a 10-row identity task ran ~280 ms. With the
 finders dropped, the next task's invalidation has no archive to re-read,
-and the same task runs ~70 ms. The purge runs in two places:
-
-- ``operators.extraction.map_rows`` runs it after a partition's last
-  batch, when the task has made every import it needs. Its stages
-  (extraction, the multimodal decoders) leave the next task nothing to
-  re-read.
-- ``resolve()`` ends with it, for ``make_embed_udf``: a scalar pandas UDF
-  has no end-of-task hook. Purging that early is not enough alone: the
-  lazy imports of a worker's first task rebuild a few finders after it
-  (``pyspark.zip``, the ``spark-core`` jar, py4j), and the worker's next
-  task re-reads them (~40–50 ms).
+and the same task runs ~70 ms. The purge runs in one place: after the
+last batch of each Python stage, when the task has made every import it
+needs (``operators.extraction.map_rows`` — extraction, the multimodal
+decoders — and ``operators.extraction.embed_unique``, the embedding
+stage). Purging earlier is not enough: the lazy imports of a worker's
+first task rebuild a few finders (``pyspark.zip``, the ``spark-core``
+jar, py4j), and the worker's next task would re-read them (~40–50 ms).
 
 The purge can go once workers no longer import from archives, or once
 the interpreter re-reads an invalidated archive lazily.
@@ -127,15 +123,13 @@ class ModelSeam:
 
     def resolve(self) -> "ResolvedModels":
         """Call inside the worker, once per partition: returns the
-        initialized model functions (worker-cached where possible), then
-        drops the worker's archive finders (``drop_archive_finders``; see
-        the module docstring for why ``map_rows`` drops them again)."""
+        initialized model functions (worker-cached where possible)."""
         from . import (
             embed_text, extract_entities, extract_main_content,
             ocr_payload_pages,
         )
 
-        models = ResolvedModels(
+        return ResolvedModels(
             # default OCR handles BOTH pdf containers (page expansion) and
             # image containers (single page) — reference process_document
             # routes the same way (ocr_service.py:193-208)
@@ -144,8 +138,6 @@ class ModelSeam:
             embed=resolve_factory(self.embed_factory, embed_text),
             html=resolve_factory(self.html_factory, extract_main_content),
         )
-        drop_archive_finders()
-        return models
 
 
 @dataclass

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import re
 
+from .textops import strip_control_chars
+
 # reference validation.py:113-118
 EXECUTABLE_SIGNATURES: tuple[bytes, ...] = (
     b"MZ",  # Windows PE
@@ -38,7 +40,6 @@ _OCR_ERROR_RES = [  # reference validation.py:330-336
 
 _SPECIAL_RE = re.compile(r"[^a-zA-Z0-9\s]")
 _DIGIT_RE = re.compile(r"\d")
-_CONTROL_RE = re.compile(r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]")
 
 
 def is_executable_payload(data: bytes) -> bool:
@@ -73,7 +74,7 @@ def sanitize_string(s: str, max_length: int = 1000) -> str:
     """Control-char strip + length clamp (reference validation.py:134-158)."""
     if not s:
         return ""
-    s = _CONTROL_RE.sub("", s)
+    s = strip_control_chars(s)
     return s[:max_length].strip()
 
 
@@ -216,7 +217,7 @@ def _sanitize_raising(s: str, max_length: int) -> str:
     chars and whitespace but REJECTS over-long input (unlike this
     module's truncating sanitize_string, which serves the quarantine
     pipeline)."""
-    out = _CONTROL_RE.sub("", s).strip()
+    out = strip_control_chars(s).strip()
     if len(out) > max_length:
         raise ValueError(
             f"String too long: {len(out)} characters (max: {max_length})"

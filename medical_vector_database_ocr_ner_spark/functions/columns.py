@@ -241,6 +241,13 @@ def url_page_no_col(url: Column | str) -> Column:
     return F.regexp_extract(url, r"([0-9]+)$", 1).try_cast("bigint")
 
 
+def url_page_id_col(url: Column | str) -> Column:
+    """The url's page id as a bigint: its trailing digits, before an
+    optional ".pdf" suffix, so a pdf page keeps the id of its html
+    sibling; NULL when it has none (try_cast, as in url_page_no_col)."""
+    return F.regexp_extract(url, r"([0-9]+)(\.pdf)?$", 1).try_cast("bigint")
+
+
 def url_filter_rule_col(url: Column) -> Column:
     """First-failing-rule classification for a url (or 'pass') — the
     zeroth, bytes-free tier of the curation funnel (C4/CCNet both gate on

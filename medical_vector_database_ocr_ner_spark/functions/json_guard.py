@@ -22,9 +22,11 @@ first-violation DFS order, dict order = document order) as a plain Python
 function, then lifts it into an Arrow-batched pandas UDF — the right
 shape for a structurally-recursive check no Catalyst expression can
 express. ``split_quarantine`` is the operator: one pass computes the
-verdict column; valid rows flow on, violating rows land in a quarantine
-DataFrame carrying the error. Both outputs derive from one cached scan —
-no per-row Python outside the Arrow batches, no driver collect.
+verdict column (``validate_json_tiered``: rows the native tier settles
+never reach the recursion); valid rows flow on, violating rows land in a
+quarantine DataFrame carrying the error. Both outputs derive from one
+cached scan — no per-row Python outside the Arrow batches, no driver
+collect.
 """
 
 from __future__ import annotations
@@ -224,7 +226,7 @@ def split_quarantine(
     Quarantined rows carry the reference's exact error string in
     ``error_col``.
     """
-    judged = df.withColumn(error_col, json_violation_udf(F.col(json_col)))
+    judged = validate_json_tiered(df, json_col, error_col)
     valid = judged.where(F.col(error_col).isNull()).drop(error_col)
     quarantined = judged.where(F.col(error_col).isNotNull())
     return valid, quarantined
@@ -238,8 +240,7 @@ def split_quarantine_cached(
     the validation UDF runs once across actions on both outputs; the cache
     is released when the block exits (the corpus-sized judged frame must
     not pin executor storage for the session)."""
-    judged = df.withColumn(error_col, json_violation_udf(F.col(json_col)))
-    judged = judged.cache()
+    judged = validate_json_tiered(df, json_col, error_col).cache()
     try:
         yield (
             judged.where(F.col(error_col).isNull()).drop(error_col),

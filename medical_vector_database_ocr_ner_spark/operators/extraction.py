@@ -136,38 +136,6 @@ def _extract_row(models, kind: str, html: bytes | None, reject_reason: str | Non
         return None, None, None, "failed", f"{type(exc).__name__}: {exc}"[:1000]
 
 
-def make_embed_udf(seam=None):
-    """Seam-aware X5 embedding UDF. A scalar pandas UDF body runs once per
-    Arrow BATCH, so the seam resolves through a closure cell: unnamed
-    factories (closures/partials) initialize at most once per task, named
-    factories once per worker via core/models.py's cache — never per
-    batch. This stage has no end-of-task hook, so ``resolve()`` itself
-    drops the archive finders (core/models.py).
-
-    Hot path is vectorized: each document's vector stays a float32 numpy
-    array and Arrow converts the whole batch — never ``[float(x) for x in
-    vec]`` (384 boxed Python floats per doc on the bench's hottest
-    path)."""
-    import numpy as np
-
-    cell: dict = {}
-
-    def _embed(texts: pd.Series) -> pd.Series:
-        if "m" not in cell:
-            from ..core.models import DEFAULT_SEAM
-
-            cell["m"] = (seam or DEFAULT_SEAM).resolve()
-        models = cell["m"]
-        # asarray is a no-op for the built-in embed (already float32
-        # ndarray); real-model seams returning list[float] get one bulk
-        # numpy conversion instead of 384 per-element float() calls
-        return pd.Series(
-            [np.asarray(models.embed(t or ""), dtype=np.float32) for t in texts]
-        )
-
-    return pandas_udf(ArrayType(FloatType()))(_embed)
-
-
 def embed_unique(
     df: "DataFrame", key: str, text: str, seam=None
 ) -> "DataFrame":

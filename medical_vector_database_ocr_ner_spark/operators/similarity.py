@@ -1,7 +1,9 @@
 """Similarity search over an embedding column (array<float>).
 
 - ``brute_force_topk``: exact dot-product top-k, entirely JVM-side
-  (``dot`` → TakeOrderedAndProject). The correctness baseline.
+  (``dot`` → TakeOrderedAndProject). The correctness baseline, and the
+  one exact top-k: ``plans.pipeline.search_topk`` ranks a whole table
+  through it and ``IvfIndex.search`` its probed candidates.
 - ``IvfIndex``: inverted-file ANN — deterministic centroids, one-shuffle
   partition assignment, searches probe only ``nprobe`` partitions. The
   100 TB path: the scan prunes to nprobe/n_centroids of the corpus.
@@ -62,10 +64,16 @@ def dot_lit(vec_col: str, query_vec: list[float]) -> "Column":
 def brute_force_topk(
     emb: "DataFrame", query_vec: list[float], k: int = 10,
     vec_col: str = "embedding", id_col: str = "vec_id",
+    extra_cols: list[str] | None = None,
 ) -> "DataFrame":
-    """Exact top-k: distributed TakeOrderedAndProject, no global sort."""
+    """Exact top-k: distributed TakeOrderedAndProject, no global sort.
+    ``extra_cols`` ride along after ``similarity`` (J3 hydration)."""
     return (
-        emb.select(F.col(id_col), dot_lit(vec_col, query_vec).alias("similarity"))
+        emb.select(
+            F.col(id_col),
+            dot_lit(vec_col, query_vec).alias("similarity"),
+            *[F.col(c) for c in (extra_cols or [])],
+        )
         .orderBy(F.desc("similarity"), F.asc(id_col))
         .limit(k)
     )
@@ -250,14 +258,7 @@ class IvfIndex:
         )
         probe_ids = [cid for cid, _ in scored_centroids[:nprobe]]
         candidates = self.assigned.where(F.col("centroid_id").isin(probe_ids))
-        return (
-            candidates.select(
-                self.id_col,
-                dot_lit(self.vec_col, query_vec).alias("similarity"),
-            )
-            .orderBy(F.desc("similarity"), F.asc(self.id_col))
-            .limit(k)
-        )
+        return brute_force_topk(candidates, query_vec, k, self.vec_col, self.id_col)
 
     def recall_at_k(self, emb: "DataFrame", query_vec: list[float],
                     k: int = 10, nprobe: int = 4) -> float:

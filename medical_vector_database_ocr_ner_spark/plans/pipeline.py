@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions import columns as FX
 from ..operators.extraction import embed_unique, stage_width
-from ..operators.similarity import dot_lit
+from ..operators.similarity import brute_force_topk
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
@@ -44,11 +44,11 @@ def build_embeddings(
     exchange, and the sink write runs that wide too.
 
     carry_cols: extra document columns to ride along (one value per
-    content hash). When the search result needs hydration and the
-    documents DataFrame is itself an unmaterialized extraction plan,
-    carrying the columns here keeps extraction to ONE pass — a
-    hydration join back against the same plan would recompute the whole
-    UDF stage for the second branch.
+    content hash): the search's hydration path (``search_topk``'s
+    ``extra_cols``). It keeps extraction to ONE pass when the documents
+    DataFrame is itself an unmaterialized extraction plan — a hydration
+    join back against the same plan would recompute the whole UDF stage
+    for the second branch.
 
     models: optional core.models.ModelSeam — swaps a real embedding model
     into the Arrow-batched stage (initialized once per worker for named
@@ -88,12 +88,13 @@ def search_topk(
     embeddings: "DataFrame",
     query_text: str,
     k: int = 10,
-    documents: "DataFrame | None" = None,
     extra_cols: list[str] | None = None,
 ) -> "DataFrame":
-    """§3.2 search plan: embed the query once on the driver, score every
-    stored vector JVM-side, distributed top-k (TakeOrderedAndProject — no
-    global sort), optionally hydrate against the documents table (J3).
+    """§3.2 search plan: embed the query once on the driver, then the
+    exact top-k (``similarity.brute_force_topk``): every stored vector
+    scored JVM-side, distributed top-k (TakeOrderedAndProject — no global
+    sort). Hydration (J3) is ``extra_cols``: columns carried through
+    ``build_embeddings(carry_cols=...)`` ride along with each hit.
 
     similarity = dot product; vectors are unit-normalized at build time so
     this equals cosine, matching the reference's ``1 - distance``
@@ -101,37 +102,20 @@ def search_topk(
     from ..core import embed_text
 
     qvec = [float(x) for x in embed_text(query_text)]
-    scored = embeddings.select(
-        "vec_id",
-        dot_lit("embedding", qvec).alias("similarity"),
-        *[F.col(c) for c in (extra_cols or [])],
-    )
-    topk = scored.orderBy(F.desc("similarity"), F.asc("vec_id")).limit(k)
-    if documents is not None:
-        docs = documents.select(
-            F.col("content_hash").alias("vec_id"), "url", "extracted_text", "entity_count"
-        ).dropDuplicates(["vec_id"])
-        topk = topk.join(docs, "vec_id", "left").orderBy(
-            F.desc("similarity"), F.asc("vec_id")
-        )
-    return topk
+    return brute_force_topk(embeddings, qvec, k, extra_cols=extra_cols)
 
 
 def search_by_entities(
     embeddings: "DataFrame",
     entity_texts: list[str],
     k: int = 10,
-    documents: "DataFrame | None" = None,
     extra_cols: list[str] | None = None,
 ) -> "DataFrame":
     """Entity-driven search (reference document_service.py:181-206,
     vector_service.py:166-181): the query text is the space-joined entity
     texts, then the exact §3.2 search plan. Kept as a named operator so
     the reference's API surface maps one-to-one."""
-    return search_topk(
-        embeddings, " ".join(entity_texts), k, documents=documents,
-        extra_cols=extra_cols,
-    )
+    return search_topk(embeddings, " ".join(entity_texts), k, extra_cols)
 
 
 def entity_type_histogram(documents: "DataFrame") -> "DataFrame":

@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 from ..functions.columns import (
     url_filter_rule_col,
     url_host_col,
+    url_page_id_col,
     url_page_no_col,
 )
 from .queries import (
@@ -2092,7 +2093,7 @@ def _host_links(pages):
     page id), self-links dropped. The fixture's own anchors are all
     same-host relative links, so the targets are derived from the page id
     instead. One (src, dst) row per link; callers aggregate."""
-    i = F.regexp_extract("url", r"([0-9]+)(\.pdf)?$", 1).try_cast("bigint")
+    i = url_page_id_col("url")
     links = pages.select(url_host_col("url").alias("src"), i.alias("i"))
 
     def dst(expr):
@@ -2360,7 +2361,7 @@ def q_bloom_url_seen(spark, sf):
     from .queries import _pages_for_sf
 
     pages = _pages_for_sf(spark, sf)
-    page_i = F.regexp_extract("url", r"([0-9]+)(\.pdf)?$", 1).try_cast("bigint")
+    page_i = url_page_id_col("url")
     pos = F.array(
         *[
             F.pmod(
@@ -5480,9 +5481,7 @@ def q_etld1_registrable(spark, sf):
     pages = _pages_for_sf(spark, sf)
     base = pages.select(
         url_host_col("url").alias("host0"),
-        F.regexp_extract("url", r"([0-9]+)(\.pdf)?$", 1)
-        .try_cast("bigint")
-        .alias("i"),
+        url_page_id_col("url").alias("i"),
     )
     host = (
         F.when(

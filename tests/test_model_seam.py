@@ -106,19 +106,46 @@ class TestSeamInExtraction:
         inits = marker.read_text().count("init")
         assert inits == 2, f"expected 2 partition inits, saw {inits}"
 
-    def test_seam_embed_udf(self, spark):
+    def test_embed_unique_seam_first_row_per_key(self, spark):
+        """The embedding stage runs the seam's embed model and keeps
+        exactly the first row of each key, also when a key's rows fall in
+        different Arrow batches of the partition."""
+        import pyarrow as pa
+
         from medical_vector_database_ocr_ner_spark.core.models import ModelSeam
         from medical_vector_database_ocr_ner_spark.operators.extraction import (
-            make_embed_udf,
+            embed_unique,
         )
 
         def embed_factory():
-            return lambda t: [float(len(t))]
+            return lambda t: [float(len(t)), float(t.split("-")[1])]
 
-        seam = ModelSeam(embed_factory=embed_factory)
-        df = spark.createDataFrame([("abc",), ("de",)], "t string")
-        out = df.select(make_embed_udf(seam)(F.col("t")).alias("v")).collect()
-        assert [r["v"] for r in out] == [[3.0], [2.0]]
+        keys = "aabcbadceabd"  # 'a' at 0, 1, 5, 9: batches 0, 0, 1, 3
+        df = spark.createDataFrame(
+            [(i, k, f"{k}-{i}") for i, k in enumerate(keys)],
+            "id int, k string, t string",
+        ).coalesce(1)  # one partition holds every row of a key, in order
+        old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
+        try:
+            batches = df.mapInArrow(
+                lambda it: (pa.RecordBatch.from_pydict({"n": [b.num_rows]})
+                            for b in it),
+                "n long",
+            ).collect()
+            out = embed_unique(
+                df, "k", "t", ModelSeam(embed_factory=embed_factory)
+            ).collect()
+        finally:
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+        assert [r["n"] for r in batches] == [3, 3, 3, 3]
+        first = {k: keys.index(k) for k in keys}
+        assert {r["k"]: r["id"] for r in out} == first
+        assert len(out) == len(first)
+        for r in out:
+            assert r["t"] == f"{r['k']}-{r['id']}"
+            assert r["embedding"] == [float(len(r["t"])), float(r["id"])]
 
     def test_default_seam_unchanged(self, spark):
         """No seam → identical output to the pre-seam golden behavior."""
@@ -355,9 +382,10 @@ def _zip_finders():
 
 
 class TestArchiveFinders:
-    """``ModelSeam.resolve()`` drops the worker's ``zipimporter`` finders
-    so the next task's ``importlib.invalidate_caches()`` re-reads no
-    archive (core/models.py module docstring)."""
+    """Each Python stage (``map_rows``, ``embed_unique``) drops the
+    worker's ``zipimporter`` finders after its last batch, so the next
+    task's ``importlib.invalidate_caches()`` re-reads no archive
+    (core/models.py module docstring)."""
 
     def test_drop_keeps_archive_importable(self, tmp_path, monkeypatch):
         import sys

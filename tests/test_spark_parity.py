@@ -141,19 +141,35 @@ class TestEmbeddingsParity:
 
 
 class TestSearch:
-    def test_topk_relevance_and_determinism(self, documents_df):
+    def test_topk_relevance_and_determinism(self, pages_df):
+        from medical_vector_database_ocr_ner_spark.operators.extraction import (
+            extract_documents,
+        )
         from medical_vector_database_ocr_ner_spark.plans.pipeline import (
             build_embeddings, search_topk,
         )
 
-        emb = build_embeddings(documents_df).cache()
-        r1 = search_topk(emb, "Metformin diabetes prescription", 5, documents_df).collect()
-        r2 = search_topk(emb, "Metformin diabetes prescription", 5, documents_df).collect()
+        cols = ["url", "extracted_text", "entity_count"]
+        # No cache outlives this test: the cache manager would substitute a
+        # cached embeddings or documents plan into every later plan over
+        # the same pages (the session-wide documents_df fixture is one),
+        # and tests/test_embedding_layout.py reads the executed plan.
+        docs = extract_documents(pages_df)
+        emb = build_embeddings(docs, carry_cols=cols).cache()
+        try:
+            r1 = search_topk(
+                emb, "Metformin diabetes prescription", 5, extra_cols=cols
+            ).collect()
+            r2 = search_topk(
+                emb, "Metformin diabetes prescription", 5, extra_cols=cols
+            ).collect()
+        finally:
+            emb.unpersist()
         assert [x["vec_id"] for x in r1] == [x["vec_id"] for x in r2]
         assert len(r1) == 5
         sims = [x["similarity"] for x in r1]
         assert sims == sorted(sims, reverse=True)
-        assert all(x["url"] is not None for x in r1)  # hydration join worked
+        assert all(x["url"] is not None for x in r1)  # hydration carried
 
     def test_topk_matches_brute_force(self, documents_df, goldens):
         import numpy as np

@@ -1,5 +1,5 @@
-"""functions/columns.url_host_col and url_page_no_col: the two url
-building blocks every crawl query in plans/queries_ext keys on."""
+"""functions/columns.url_host_col, url_page_no_col and url_page_id_col:
+the url building blocks every crawl query in plans/queries_ext keys on."""
 
 from __future__ import annotations
 
@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from medical_vector_database_ocr_ner_spark.functions.columns import (
     url_host_col,
+    url_page_id_col,
     url_page_no_col,
 )
 
@@ -65,6 +66,21 @@ class TestUrlPageNo:
         )
         kept = df.where(url_page_no_col("url") % 3 == 0).collect()
         assert [r["url"] for r in kept] == ["https://h.example/page/9"]
+
+
+class TestUrlPageId:
+    def test_digits_before_optional_pdf_suffix(self, spark):
+        urls = [
+            "https://host3.example/page/42",
+            "https://host3.example/doc/3.pdf",   # a pdf keeps its page id
+            "https://host3.example/doc/3.pdfx",  # not the .pdf suffix
+            "https://host3.example/page/abc",
+            "https://host3.example",
+        ]
+        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+        assert _one(spark, urls, url_page_id_col("url")) == [
+            42, 3, None, None, None
+        ]
 
 
 class TestSameAsInlineForms:
