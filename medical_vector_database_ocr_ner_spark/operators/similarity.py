@@ -128,16 +128,11 @@ def batch_topk(
 
 
 class IvfIndex:
-    """Inverted-file index: deterministic seed centroids (first n vectors
-    by id), optionally refined by ``train_iters`` rounds of DataFrame
-    Lloyd's k-means; every vector assigned to its best centroid once (one
-    argmax column expression), stored partitioned by centroid. Queries
-    score only nprobe centroid partitions.
-
-    Training is fully distributed and deterministic: each round is one
-    assignment pass (pure column expression — no Python) plus one
-    per-(centroid, dimension) mean aggregation; only the k×dim centroid
-    matrix ever reaches the driver.
+    """Inverted-file index: deterministic centroids (the first
+    ``n_centroids`` vectors by id, the only k×dim data that reaches the
+    driver); every vector assigned to its best centroid once (one argmax
+    column expression), stored partitioned by centroid. Queries score only
+    nprobe centroid partitions.
 
     At 10^12 vectors: assignment is a map-side pass; the search reads
     nprobe/n_centroids of the data — partition pruning does the rest when
@@ -146,7 +141,6 @@ class IvfIndex:
     def __init__(
         self, emb: "DataFrame", n_centroids: int = 16,
         vec_col: str = "embedding", id_col: str = "vec_id",
-        train_iters: int = 0,
     ) -> None:
         self.vec_col, self.id_col = vec_col, id_col
         self.n_centroids = n_centroids
@@ -157,53 +151,7 @@ class IvfIndex:
                 .select(id_col, vec_col).collect()
             )
         ]
-        for _ in range(train_iters):
-            self.centroids = self._lloyd_round(emb)
         self.assigned = self._assign(emb).cache()
-
-    _MEAN_SCALE = 1_000_000  # quantization for order-independent means
-
-    def _lloyd_round(self, emb: "DataFrame") -> list[tuple[int, list[float]]]:
-        """One Lloyd's iteration: assign every vector to its best current
-        centroid, then recompute each centroid as the per-dimension mean
-        of its members (empty clusters keep their old centroid).
-
-        The mean is computed over 1e-6-quantized values as an INTEGER sum:
-        integer addition is associative/commutative, so the result is
-        bit-identical regardless of partition count or shuffle-fetch order
-        — a float avg() would drift in the last bits across runs and break
-        the determinism this index guarantees. (Unit-norm components and
-        long arithmetic keep the sum far from overflow below ~10^12 rows
-        per cluster.)"""
-        assigned = self._assign(emb)
-        scale = float(self._MEAN_SCALE)
-        means = (
-            assigned.select(
-                "centroid_id",
-                F.posexplode(F.col(self.vec_col)).alias("dim", "x"),
-            )
-            .groupBy("centroid_id", "dim")
-            .agg(
-                (
-                    F.sum(
-                        F.round(F.col("x").cast("double") * scale).cast("long")
-                    )
-                    / (F.count("*") * scale)
-                ).alias("m")
-            )
-            .collect()
-        )
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cid.setdefault(int(r["centroid_id"]), {})[int(r["dim"])] = float(r["m"])
-        out = []
-        for cid, old in self.centroids:
-            dims = by_cid.get(cid)
-            if dims:
-                out.append((cid, [dims[i] for i in range(len(old))]))
-            else:
-                out.append((cid, old))
-        return out
 
     def _centroid_df(self, spark) -> "DataFrame":
         """ONE row holding array<struct<cid,cvec>> — centroids as broadcast

@@ -76,9 +76,11 @@ def run_with_lineage(
     docs = docs.cache()
 
     # idempotent per-bucket output: dynamic partition overwrite replaces
-    # exactly the buckets this run touched
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    docs.write.mode("overwrite").partitionBy("bucket").parquet(docs_dir)
+    # exactly the buckets this run touched (a writer option, so the
+    # session's own overwrite mode stays as the caller set it)
+    docs.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(docs_dir)
 
     wall_ms = int((time.time() - t0) * 1000)
     metrics = docs.groupBy("bucket").agg(

@@ -1353,14 +1353,17 @@ DRIVER_PRIORITY: list[str] = [
     # / search_topk on similarity.dot, now SQL-rendered from dot_sql;
     # similarity.brute_force_topk is the one exact top-k, the scorer of
     # semantic_search through search_topk and of the ivf_* queries through
-    # IvfIndex.search, with the same optimized plans); the tool only sees
-    # the query's own source, so these are hand-audited.
+    # IvfIndex.search, with the same optimized plans; IvfIndex has lost
+    # its unused Lloyd's training path, train_iters, which no query set);
+    # the tool only sees the query's own source, so these are hand-audited.
     # The same blind spot covers the round-10 helpers
     # functions/columns.url_host_col and url_page_no_col,
     # queries_ext._host_links and streaming/frontier.outlink_candidates,
     # and url_page_id_col (its callers _host_links, bloom_url_seen and
-    # etld1_registrable sit in tier 1): an edit to one of them must rotate
-    # its callers in here by hand
+    # etld1_registrable sit in tier 1), and queries_ext._host_edges and
+    # _hosts, the one weighted host graph and node set of pagerank_hosts,
+    # hits_hosts, crawl_depth_bfs and host_triangle_count (all in tier 1):
+    # an edit to one of them must rotate its callers in here by hand
     "knn_hydrated",
     "simhash_band_pairs",
     "simhash_hot_bucket_split",

@@ -2106,6 +2106,28 @@ def _host_links(pages):
     )
 
 
+def _host_edges(spark, sf):
+    """The weighted host graph of the four graph queries: one (src, dst)
+    row per host pair of _host_links, w = its link count. Page-scale data
+    is touched once, here; everything after shuffles O(host pairs)."""
+    from .queries import _pages_for_sf
+
+    return (
+        _host_links(_pages_for_sf(spark, sf))
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("w"))
+    )
+
+
+def _hosts(edges):
+    """The node set (one ``host`` row each) of a _host_edges graph."""
+    return (
+        edges.select(F.col("src").alias("host"))
+        .unionByName(edges.select(F.col("dst").alias("host")))
+        .distinct()
+    )
+
+
 # DuckDB mirror of _host_links: the CTEs links(src, i) and
 # host_links(src, dst), for the four graph oracles to build on
 _HOST_LINKS_SQL = f"""links AS (
@@ -2144,21 +2166,9 @@ def q_pagerank_hosts(spark, sf):
     a (rank DESC, host) total order so the LIMIT cutoff is deterministic.
     The host count is a one-row aggregate inside the plan, never a
     driver-side count."""
-    from .queries import _pages_for_sf
-
-    edges = (
-        _host_links(_pages_for_sf(spark, sf))
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("w"))
-        .persist()
-    )
+    edges = _host_edges(spark, sf)
     outw = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    nodes = (
-        edges.select(F.col("src").alias("host"))
-        .unionByName(edges.select(F.col("dst").alias("host")))
-        .distinct()
-        .persist()
-    )
+    nodes = _hosts(edges)
     n = F.broadcast(nodes.agg(F.count("*").alias("n")))
     rank = nodes.crossJoin(n).select(
         "host", F.expr(f"{_PR_SCALE} div n").alias("rank")
@@ -4124,20 +4134,8 @@ def q_hits_hosts(spark, sf):
     CC operator so the lineage — and the physical plan — stays
     iteration-count-independent); every iteration shuffles only the
     O(hosts) graph."""
-    from .queries import _pages_for_sf
-
-    edges = (
-        _host_links(_pages_for_sf(spark, sf))
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("w"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        edges.select(F.col("src").alias("host"))
-        .unionByName(edges.select(F.col("dst").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = _host_edges(spark, sf).localCheckpoint(eager=True)
+    nodes = _hosts(edges).localCheckpoint(eager=True)
 
     def _rescale(df_, raw, out):
         tot = df_.agg(F.sum(raw).alias("tot"))
@@ -5014,18 +5012,11 @@ def q_crawl_depth_bfs(spark, sf):
     like CC/HITS so lineage and plan stay iteration-independent; the
     page-scale table is touched exactly once (edge aggregation). At
     10^12 pages the host graph is ~10^8 rows — every per-iteration
-    shuffle is graph-sized, never corpus-sized."""
-    from .queries import _pages_for_sf
-
-    edges = (
-        _host_links(_pages_for_sf(spark, sf))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    shuffle is graph-sized, never corpus-sized. Hops ignore the edge
+    weight w."""
+    edges = _host_edges(spark, sf).localCheckpoint(eager=True)
     dist = (
-        edges.select(F.col("src").alias("host"))
-        .unionByName(edges.select(F.col("dst").alias("host")))
-        .distinct()
+        _hosts(edges)
         .where(F.col("host").isin(*_BFS_SEEDS))
         .select("host", F.lit(0).cast("bigint").alias("dist"))
         .localCheckpoint(eager=True)
@@ -5579,9 +5570,7 @@ def q_host_triangle_count(spark, sf):
     O(hosts) edge relation: wedges = e1(a,b) ⋈ e2(b,c), closed by an
     edge-set semi-join on (a,c). Pages are touched once (edge agg);
     triangle density is the classic spam-farm / link-ring signal."""
-    from .queries import _pages_for_sf
-
-    und = _host_links(_pages_for_sf(spark, sf)).select(
+    und = _host_edges(spark, sf).select(
         F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
     ).distinct()
     deg = (

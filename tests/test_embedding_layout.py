@@ -9,6 +9,7 @@ file with one row group and every search over it as one task."""
 import glob
 import os
 import re
+import shutil
 
 import pytest
 
@@ -18,7 +19,9 @@ EXCHANGE = re.compile(r"\bExchange hashpartitioning\((\w+)#\d+, (\d+)\), (\w+)")
 @pytest.fixture(scope="module")
 def layout(spark, pages_parquet, tmp_path_factory):
     """Embeddings of the 200-page fixture: the executed plan, then the
-    sink written from the same DataFrame."""
+    sink written from the same DataFrame. The pages are read from a copy
+    of the fixture table: a cached plan over the original (conftest's
+    ``documents_df``) would otherwise stand in for the extraction."""
     from medical_vector_database_ocr_ner_spark.operators.extraction import (
         extract_documents,
     )
@@ -26,7 +29,9 @@ def layout(spark, pages_parquet, tmp_path_factory):
         build_embeddings,
     )
 
-    emb = build_embeddings(extract_documents(spark.read.parquet(pages_parquet)))
+    pages = str(tmp_path_factory.mktemp("pages") / "pages.parquet")
+    shutil.copytree(pages_parquet, pages)
+    emb = build_embeddings(extract_documents(spark.read.parquet(pages)))
     n_rows = len(emb.collect())
     # the final adaptive plan, as executed (not AQE's initial plan)
     plan = emb._jdf.queryExecution().executedPlan().executedPlan().toString()

@@ -518,32 +518,6 @@ class TestMergeUpsert:
             assert os.path.getmtime(os.path.join(path, d)) == before[d], d
 
 
-class TestIvfTraining:
-    def test_lloyd_training_deterministic_and_recall_holds(self, spark):
-        """DataFrame Lloyd's k-means for IVF: training is deterministic
-        (same centroids across runs) and trained recall stays in the same
-        band as untrained on the uniform fixture (no cluster structure to
-        exploit there — on real clustered corpora training tightens the
-        partitions; here it must at least not break them)."""
-        from medical_vector_database_ocr_ner_spark.operators.similarity import (
-            IvfIndex,
-        )
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        qs = [
-            [float(x) for x in r["embedding"]]
-            for r in emb.where("vec_id in (1, 17, 33)").collect()
-        ]
-
-        t1 = IvfIndex(emb, n_centroids=4, train_iters=2)
-        t2 = IvfIndex(emb, n_centroids=4, train_iters=2)
-        assert t1.centroids == t2.centroids
-        assert t1.centroids != IvfIndex(emb, n_centroids=4).centroids
-
-        rec = sum(t1.recall_at_k(emb, q, k=10, nprobe=2) for q in qs) / len(qs)
-        assert rec >= 0.4, rec
-
-
 class TestSearchByEntities:
     def test_equals_search_with_joined_text(self, spark, documents_df):
         """search_by_entities == search_topk on the space-joined entity

@@ -184,6 +184,30 @@ class TestLineageResume:
         assert all(r["url_min"] <= r["url_max"] for r in rows)
         assert all(r["wall_ms"] >= 0 for r in rows)
 
+    def test_run_leaves_session_overwrite_mode(self, spark, pages_df, tmpdir_clean):
+        """The documents write asks for dynamic partition overwrite as a
+        writer option: after a lineage run, a static-mode session's
+        overwrite of a partitioned table still replaces every partition."""
+        from medical_vector_database_ocr_ner_spark.plans.lineage import (
+            run_with_lineage,
+        )
+        from medical_vector_database_ocr_ner_spark.sources.partitioned import (
+            write_pages_partitioned,
+        )
+
+        key = "spark.sql.sources.partitionOverwriteMode"
+        spark.conf.set(key, "static")
+        try:
+            run_with_lineage(spark, pages_df, os.path.join(tmpdir_clean, "lin"),
+                             n_buckets=8)
+            assert spark.conf.get(key) == "static"
+            path = os.path.join(tmpdir_clean, "pages_by_date")
+            write_pages_partitioned(pages_df, path)
+            write_pages_partitioned(pages_df.orderBy("url").limit(10), path)
+            assert spark.read.parquet(path).count() == 10
+        finally:
+            spark.conf.unset(key)
+
 
 class TestStreamingDedup:
     def test_in_horizon_duplicates_dropped(self, spark, tmpdir_clean):

@@ -107,9 +107,10 @@ SELECTED = [
      "agg; the final summaries are 1-row aggregates."),
     ("pagerank_hosts",
      "Page-scale data is touched exactly ONCE (the link→edge "
-     "aggregation); all three rank iterations operate on the persisted "
-     "host graph — InMemoryTableScans of edges/nodes, never the pages "
-     "scan. Join strategy is deliberately left to AQE: at fixture scale "
+     "aggregation of _host_edges); every rank iteration re-reads that "
+     "one host graph, and AQE runs its Exchange once and reuses the "
+     "stage everywhere else (ReusedExchange in the final plan), with no "
+     "cache that outlives the query. Join strategy is deliberately left to AQE: at fixture scale "
      "(50 hosts) every outw/rank/contrib join converts to runtime "
      "broadcast; at the real web's ~10^8 hosts the identical plan "
      "degrades to shuffled joins co-partitioned on the host key — the "
@@ -195,7 +196,8 @@ SELECTED = [
      "into 16 shards before the per-language Window sees ≤16×20 "
      "survivors — no 5-hot-key sort of the corpus."),
     ("hits_hosts",
-     "Page-scale data touched exactly once (edge aggregation, persisted); "
+     "Page-scale data touched exactly once (edge aggregation, "
+     "localCheckpointed); "
      "every HITS half-iteration joins and aggregates only the O(hosts) "
      "graph; rescale totals are one-row broadcast crossJoins."),
     ("simhash_band_pairs",
