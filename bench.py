@@ -56,11 +56,13 @@ def _measure_burn(n_procs: int, dur: float = 4.0) -> float:
     return burn_rate(n_procs, dur)
 
 
-# Best idle-window burn observed on this host at 32 procs (BENCH.md r3:
-# 793-855 M/s idle, 468-562 M/s under co-tenant load). burn_normalized
+# Best idle-window burn by process count: 32 procs read 793-855 M/s idle
+# and 468-562 M/s under co-tenant load (BENCH.md r3). burn_normalized
 # scales the raw total by measured/reference so a busy-window run can be
-# compared against idle-window history; raw is always reported first.
-BURN_REFERENCE_M_PER_S = 855.0
+# compared against idle-window history; raw is always reported first. A
+# CPU count with no recorded idle reference reports both as null; none is
+# extrapolated from another count's reading.
+BURN_REFERENCE_M_PER_S = {32: 855.0}
 
 
 def main() -> None:
@@ -164,6 +166,7 @@ def main() -> None:
 
     burn_after = round(_measure_burn(cpus), 1)
     burn_mean = (burn_before + burn_after) / 2.0
+    burn_ref = BURN_REFERENCE_M_PER_S.get(cpus)
 
     out = {
         "metric": "headline suite wall time (sec); docs_per_sec = extraction throughput",
@@ -178,13 +181,14 @@ def main() -> None:
         "cpus": cpus,
         # host-noise control: integer-burn capacity probe before/after the
         # suite, and the total rescaled to the reference idle window
-        # (value_burn_normalized = value * burn_mean / reference). Raw
-        # `value` is the official number; the normalized one says what the
-        # same run would read in an idle window.
+        # (value_burn_normalized = value * burn_mean / reference, null
+        # without a reference for `cpus`). Raw `value` is the official
+        # number; the normalized one says what the same run would read in
+        # an idle window.
         "burn_M_per_s": [burn_before, burn_after],
-        "burn_reference_M_per_s": BURN_REFERENCE_M_PER_S,
-        "value_burn_normalized": round(
-            total * burn_mean / BURN_REFERENCE_M_PER_S, 3
+        "burn_reference_M_per_s": burn_ref,
+        "value_burn_normalized": (
+            None if burn_ref is None else round(total * burn_mean / burn_ref, 3)
         ),
     }
     print(json.dumps(out))

@@ -115,3 +115,24 @@ def fake_pil_decoder_factory():
                     sys.modules[name] = mod
 
     return decode
+
+
+def seeded_embed_factory():
+    """An embedding model unrelated to the built-in stand-in: each text
+    maps to a unit vector drawn from a generator seeded by its crc32, so
+    equal texts get equal vectors and different texts nearly orthogonal
+    ones. A table built with it ranks a query right only if the query is
+    embedded by the same model."""
+    import zlib
+
+    import numpy as np
+
+    from .embedding import EMBEDDING_DIM
+
+    def embed(text):
+        v = np.random.default_rng(zlib.crc32(text.encode())).standard_normal(
+            EMBEDDING_DIM
+        )
+        return v / np.linalg.norm(v)
+
+    return embed

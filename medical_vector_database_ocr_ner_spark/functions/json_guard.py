@@ -129,7 +129,14 @@ def validate_json_text(text: str | None) -> str | None:
 
 @F.pandas_udf(StringType())
 def json_violation_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched lift of validate_json_text (null = valid)."""
+    """Arrow-batched lift of validate_json_text (null = valid).
+
+    The package's one scalar pandas UDF, kept on purpose: it is evaluated
+    inside ``validate_json_tiered``'s ``when`` over a masked column, so
+    only the payloads the native tier left unsettled cross to Python (the
+    settled ones cross as nulls) and the rest of the row stays in the
+    JVM. A ``map_rows`` pass (operators/extraction.py) would ship every
+    pass-through column of the caller's frame to the worker and back."""
     return texts.map(validate_json_text, na_action="ignore")
 
 

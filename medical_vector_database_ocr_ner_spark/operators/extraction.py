@@ -1,15 +1,19 @@
-"""Arrow-batched extraction operators (the only places Python executes).
+"""Arrow-batched Python stages: ``map_rows`` and ``embed_unique``.
 
 Design for 100 TB (SURVEY.md §3.3/§4.2):
 
 - Cheap native predicates run BEFORE these stages (Catalyst can't reorder
   across Python UDFs, so ordering is structural in the pipeline builder).
-- ``map_rows`` is the one ``mapInPandas`` of the package (the multimodal
-  decoders run through it too): a per-row Python function over a few
-  columns, with the other schema fields passed through. Extraction is ONE
-  such pass doing html→text→spans that DROPS the html bytes in its output
-  — payload bytes cross the JVM↔Python Arrow boundary exactly once and
-  never shuffle after it.
+- ``map_rows`` is the one ``mapInPandas`` of the package: a per-row
+  Python function over a few columns, with the other schema fields
+  passed through. Every stateless per-row Python pass runs through it:
+  extraction, the multimodal decoders and frame sampler, pdf page
+  expansion (``_pdf_pages_row``) and relational NER's raw candidates. A
+  1→N pass returns an array column that the caller explodes in the JVM
+  (SURVEY.md §2.9: no Python UDTFs). Extraction is ONE such pass doing
+  html→text→spans that DROPS the html bytes in its output — payload
+  bytes cross the JVM↔Python Arrow boundary exactly once and never
+  shuffle after it.
 - ``map_rows`` owns the partition lifecycle: model state resolves once per
   partition before the first batch (worker-cached for named factories,
   mirroring the reference's lru_cache model singletons,
@@ -20,6 +24,10 @@ Design for 100 TB (SURVEY.md §3.3/§4.2):
   page.
 - Per-row failures become ``status='failed'`` + error_message rows, the
   quarantine side-output of reference scripts/batch_process.py:115-126.
+
+The package's only other Python sites are ``functions/json_guard``'s
+masked scalar UDF and the two ``applyInPandasWithState`` sessionizers of
+``streaming/`` (tests/test_map_rows.py pins the set).
 """
 
 from __future__ import annotations
@@ -30,7 +38,6 @@ from typing import TYPE_CHECKING
 import pandas as pd
 
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType, DoubleType, FloatType, IntegerType, StringType, StructField,
     StructType, TimestampType,
@@ -190,17 +197,13 @@ def embed_unique(
     return df.mapInArrow(run, schema=schema)
 
 
-@pandas_udf(ArrayType(PAGE_TYPE))
-def pdf_pages_udf(payloads: pd.Series) -> pd.Series:
-    """X2 page expansion: pdf binary → array of (page_text, confidence);
-    explode() downstream makes this the UDTF-shaped 1→N map."""
+def _pdf_pages_row(_, payload: bytes | None):
+    """(pages,): a pdf payload's pages as (page_text, confidence) structs,
+    the array ``q_pdf_page_explode`` explodes into one row per page."""
     from ..core import ocr_pdf_pages
 
-    return payloads.map(
-        lambda b: [
-            {"page_text": t, "confidence": float(c)} for t, c in ocr_pdf_pages(b or b"")
-        ]
-    )
+    return ([{"page_text": t, "confidence": float(c)}
+             for t, c in ocr_pdf_pages(payload or b"")],)
 
 
 def extract_documents(

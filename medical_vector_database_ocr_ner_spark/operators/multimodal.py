@@ -17,7 +17,6 @@ from __future__ import annotations
 import struct
 from functools import partial
 
-import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
@@ -140,40 +139,42 @@ def _image_row(decode, payload: bytes | None):
         return None, None, None, len(payload), f"{type(exc).__name__}: {exc}"[:500]
 
 
-FRAME_SCHEMA = ArrayType(
-    StructType([
+FRAME_SCHEMA = StructType([
+    StructField("media_id", StringType()),
+    StructField("frames", ArrayType(StructType([
         StructField("frame_idx", IntegerType()),
         StructField("offset_bytes", LongType()),
         StructField("frame", BinaryType()),
-    ])
-)
+    ]))),
+])
 
 
 def frame_sample(media, every_n_bytes: int = 1024, max_frames: int = 8):
-    """Video frame sampling stand-in: 1 payload → N frame chunks via a
-    pandas UDF returning an array, exploded downstream (the UDTF shape,
-    same plumbing a real keyframe sampler needs)."""
-    from pyspark.sql.functions import pandas_udf
+    """Video frame sampling stand-in: 1 payload → N frame chunks, one
+    ``map_rows`` array column exploded downstream (the same plumbing a
+    real keyframe sampler needs)."""
+    return map_rows(
+        media.where(F.col("kind") == "video").select("media_id", "payload"),
+        FRAME_SCHEMA, ("payload",), _frames_row,
+        lambda: (every_n_bytes, max_frames),
+    ).select("media_id", F.explode("frames").alias("f")).select(
+        "media_id", "f.frame_idx", "f.offset_bytes", "f.frame"
+    )
 
-    @pandas_udf(FRAME_SCHEMA)
-    def sample(payloads: pd.Series) -> pd.Series:
-        def run(p: bytes):
-            p = p or b""
-            frames = []
-            for i in range(max_frames):
-                off = i * every_n_bytes
-                if off >= len(p):
-                    break
-                frames.append({"frame_idx": i, "offset_bytes": off,
-                               "frame": p[off:off + 64]})
-            return frames
 
-        return payloads.map(run)
-
-    vids = media.where(F.col("kind") == "video")
-    return vids.select(
-        "media_id", F.explode(sample(F.col("payload"))).alias("f")
-    ).select("media_id", "f.frame_idx", "f.offset_bytes", "f.frame")
+def _frames_row(params, payload: bytes | None):
+    """(frames,): the first 64 bytes at every ``every_n_bytes`` offset of
+    one payload, at most ``max_frames`` of them."""
+    every_n_bytes, max_frames = params
+    p = payload or b""
+    frames = []
+    for i in range(max_frames):
+        off = i * every_n_bytes
+        if off >= len(p):
+            break
+        frames.append({"frame_idx": i, "offset_bytes": off,
+                       "frame": p[off:off + 64]})
+    return (frames,)
 
 
 AUDIO_FEATURES_SCHEMA = StructType(

@@ -13,13 +13,13 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, StringType, StructField, StructType,
 )
 from pyspark.sql.window import Window
+
+from .extraction import map_rows
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
@@ -36,23 +36,14 @@ RAW_CANDIDATE_TYPE = StructType(
     ]
 )
 
-SOURCE_PRIORITY = {"general": 0, "medical": 1, "transformer": 2}
 
-
-@pandas_udf(ArrayType(RAW_CANDIDATE_TYPE))
-def raw_candidates_udf(texts: pd.Series) -> pd.Series:
-    """U1: the three extractors' concatenated raw candidates with source tag
-    and emission order (the dedup tie-breaker)."""
+def _raw_candidates_row(_, text: str | None):
+    """(candidates,): U1, the three extractors' concatenated raw candidates
+    with source tag and emission order (the dedup tie-breaker)."""
     from ..core.ner import raw_entity_candidates
 
-    def run(t):
-        if not t:
-            return []
-        return [
-            {**c, "emit_order": i} for i, c in enumerate(raw_entity_candidates(t))
-        ]
-
-    return texts.map(run)
+    return ([{**c, "emit_order": i}
+             for i, c in enumerate(raw_entity_candidates(text or ""))],)
 
 
 def label_map_df(spark) -> "DataFrame":
@@ -78,10 +69,12 @@ def extract_entities_relational(
 
     Returns (key, text, entity_type, start, end, confidence, rank)."""
     spark = docs.sparkSession
-    cands = docs.select(
-        F.col(key_col).alias("doc_key"),
-        F.explode(raw_candidates_udf(F.col(text_col))).alias("c"),
-    ).select("doc_key", "c.*")
+    keyed = docs.select(F.col(key_col).alias("doc_key"), text_col)
+    schema = StructType([keyed.schema["doc_key"],
+                         StructField("c", ArrayType(RAW_CANDIDATE_TYPE))])
+    cands = map_rows(
+        keyed, schema, (text_col,), _raw_candidates_row, lambda: None
+    ).select("doc_key", F.explode("c").alias("c")).select("doc_key", "c.*")
 
     w_dedup = Window.partitionBy("doc_key", "text", "start", "end").orderBy(
         "emit_order"

@@ -89,6 +89,7 @@ def search_topk(
     query_text: str,
     k: int = 10,
     extra_cols: list[str] | None = None,
+    models=None,
 ) -> "DataFrame":
     """§3.2 search plan: embed the query once on the driver, then the
     exact top-k (``similarity.brute_force_topk``): every stored vector
@@ -98,10 +99,17 @@ def search_topk(
 
     similarity = dot product; vectors are unit-normalized at build time so
     this equals cosine, matching the reference's ``1 - distance``
-    (vector_service.py:134) up to ChromaDB's metric convention."""
-    from ..core import embed_text
+    (vector_service.py:134) up to ChromaDB's metric convention.
 
-    qvec = [float(x) for x in embed_text(query_text)]
+    models: the core.models.ModelSeam that built ``embeddings``
+    (``build_embeddings(models=...)``); its embed factory embeds the
+    query, on the driver and with no Spark job, so the query and the
+    stored vectors come from the same model."""
+    from ..core import embed_text
+    from ..core.models import DEFAULT_SEAM, resolve_factory
+
+    embed = resolve_factory((models or DEFAULT_SEAM).embed_factory, embed_text)
+    qvec = [float(x) for x in embed(query_text)]
     return brute_force_topk(embeddings, qvec, k, extra_cols=extra_cols)
 
 
@@ -110,12 +118,14 @@ def search_by_entities(
     entity_texts: list[str],
     k: int = 10,
     extra_cols: list[str] | None = None,
+    models=None,
 ) -> "DataFrame":
     """Entity-driven search (reference document_service.py:181-206,
     vector_service.py:166-181): the query text is the space-joined entity
     texts, then the exact §3.2 search plan. Kept as a named operator so
-    the reference's API surface maps one-to-one."""
-    return search_topk(embeddings, " ".join(entity_texts), k, extra_cols)
+    the reference's API surface maps one-to-one. ``models``: as in
+    ``search_topk``."""
+    return search_topk(embeddings, " ".join(entity_texts), k, extra_cols, models)
 
 
 def entity_type_histogram(documents: "DataFrame") -> "DataFrame":

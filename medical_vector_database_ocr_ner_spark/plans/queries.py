@@ -1135,14 +1135,21 @@ def q_pages_extraction(spark, sf):
 
 
 def q_pdf_page_explode(spark, sf):
-    """X2 UDTF-shaped page expansion: pdf payloads → exploded per-page rows."""
+    """X2 page expansion: pdf payloads → exploded per-page rows. The pages
+    are one ``map_rows`` array column, exploded in the JVM."""
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
     from ..functions import columns as FX
-    from ..operators.extraction import pdf_pages_udf
+    from ..operators.extraction import PAGE_TYPE, _pdf_pages_row, map_rows
 
     pages = _pages_for_sf(spark, sf)
     pdfs = pages.where(FX.payload_kind_col(F.col("html")) == "pdf")
+    schema = StructType([StructField("url", StringType()),
+                         StructField("pages", ArrayType(PAGE_TYPE))])
     return (
-        pdfs.select("url", F.explode(pdf_pages_udf(F.col("html"))).alias("page"))
+        map_rows(pdfs.select("url", "html"), schema, ("html",),
+                 _pdf_pages_row, lambda: None)
+        .select("url", F.explode("pages").alias("page"))
         .select(
             "url",
             F.col("page.page_text").alias("page_text"),
@@ -1348,6 +1355,10 @@ DRIVER_PRIORITY: list[str] = [
     "morton_layout_keys",
     "pages_gen_probe",
     "host_mix_shift",
+    # tier 1 — stale since round 14: the pdf pages are a map_rows array
+    # column (operators.extraction._pdf_pages_row) exploded in the JVM,
+    # in place of the scalar pandas UDF pdf_pages_udf
+    "pdf_page_explode",
     # tier 1b — fingerprint unmoved but a helper they run through
     # changed (q_simhash16; IvfIndex / batch_topk / embedding_cosine_dups
     # / search_topk on similarity.dot, now SQL-rendered from dot_sql;
@@ -1384,18 +1395,19 @@ DRIVER_PRIORITY: list[str] = [
     # hash-partitions its rows on vec_id at operators.extraction.stage_width
     # and dedups and embeds them in operators.extraction.embed_unique
     # (which row of a duplicated vec_id is kept may change; every vec_id of
-    # its top-10 has one url at sf0.001, sf0.01 and sf0.1)
+    # its top-10 has one url at sf0.001, sf0.01 and sf0.1); search_topk
+    # now embeds the query through the seam's embed factory, which is
+    # core.embed_text for the default seam it runs with
     "semantic_search",
     "pages_extraction",
     "multimodal_image_features",
     # tier 2 — r4 single-greens, registry order; the round-10 stale set
-    # took the places of the other 16
+    # and pdf_page_explode took the places of the other 17
     "hll_distinct_tokens",
-    "cms_heavy_hitters",
     # tier 3 — empty this round: both headline anchors (pages_extraction,
     # semantic_search) sit in tier 1b
     # ---- below the 50-row cut: everything else ----
-    # the remaining r4 singles (intra_doc_repetition,
+    # the remaining r4 singles (cms_heavy_hitters, intra_doc_repetition,
     # tfidf_distinctive_terms, unigram_lm_doc_score, interval_overlap_join,
     # weighted_sample, length_quantile_sketch, dsir_importance_weights,
     # pmi_bigrams, source_mirror_detect, partition_checksums,

@@ -1,7 +1,11 @@
 """``operators.extraction.map_rows``: the one mapInPandas stage that runs
-every per-row Python pass (extraction, image and audio decode)."""
+every stateless per-row Python pass (extraction, image and audio decode,
+video frame sampling, pdf page expansion, relational NER's raw
+candidates), and the allowlist of the package's other Python sites."""
 
+import ast
 import importlib.util
+import os
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -11,6 +15,73 @@ from pyspark.sql.types import (
 
 MEDIA_DDL = ("media_id string, kind string, payload binary, "
              "meta struct<source_url: string, fetched_at: timestamp>")
+
+
+PACKAGE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "medical_vector_database_ocr_ner_spark",
+)
+
+# names that run Python on the executors, however they are reached
+PYTHON_SITE_NAMES = {"mapInPandas", "mapInArrow", "pandas_udf", "udtf", "udf"}
+
+# site -> why it is not a map_rows pass. Each entry must still be found,
+# so the list can only shrink.
+PYTHON_SITES_ALLOWED = {
+    "operators/extraction.py:map_rows": "the one mapInPandas",
+    "operators/extraction.py:embed_unique": (
+        "first row per key and its embedding in one mapInArrow pass, with "
+        "no Tungsten page"
+    ),
+    "functions/json_guard.py:json_violation_udf": (
+        "evaluated inside a when() over a masked column: only payloads the "
+        "native tier left unsettled cross to Python"
+    ),
+    "streaming/sessions.py:sessionize_stream": "streaming state",
+    "streaming/stateful.py:rate_limit_stateful": "streaming state",
+}
+
+
+def python_sites() -> set[str]:
+    """``path:function`` of every use of a PYTHON_SITE_NAMES or
+    ``applyInPandas*`` name in the package (a decorator counts for the
+    function it decorates, an import for its module)."""
+    sites = set()
+
+    def visit(node, rel, scope):
+        name = (node.attr if isinstance(node, ast.Attribute)
+                else node.id if isinstance(node, ast.Name) else None)
+        names = ([a.name for a in node.names]
+                 if isinstance(node, ast.ImportFrom) else [name])
+        if any(n in PYTHON_SITE_NAMES or (n or "").startswith("applyInPandas")
+               for n in names):
+            sites.add(f"{rel}:{scope or '<module>'}")
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            scope = scope or node.name
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, scope)
+
+    for d, _, files in os.walk(PACKAGE):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(d, f)
+                with open(path, encoding="utf-8") as fh:
+                    tree = ast.parse(fh.read())
+                visit(tree, os.path.relpath(path, PACKAGE), None)
+    return sites
+
+
+def test_python_sites_are_the_allowlist():
+    """Python runs on the executors only at the allowlisted sites: every
+    other per-row pass goes through map_rows, and a 1→N pass returns an
+    array column that the caller explodes (no scalar pandas UDFs, no
+    Python UDTFs)."""
+    found = python_sites()
+    assert sorted(found - PYTHON_SITES_ALLOWED.keys()) == [], (
+        "new Python sites: run them through operators.extraction.map_rows")
+    assert sorted(PYTHON_SITES_ALLOWED.keys() - found) == [], (
+        "gone: drop them from PYTHON_SITES_ALLOWED")
 
 
 def _make_counting_decoder_factory(path):

@@ -5,6 +5,7 @@ factories) / once per worker (named factories) — never per batch or row."""
 import functools
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -173,6 +174,34 @@ class TestSeamInExtraction:
             for e in row["entities"]
         ]
         assert got_ents == want_ents
+
+
+class TestSearchSeam:
+    def test_query_embedded_by_the_building_seam(self, documents_df):
+        """A table built with a custom embed seam is searched with that
+        seam's query vector: a document's exact text finds it first."""
+        from medical_vector_database_ocr_ner_spark.core.models import ModelSeam
+        from medical_vector_database_ocr_ner_spark.core.testing import (
+            seeded_embed_factory,
+        )
+        from medical_vector_database_ocr_ner_spark.plans.pipeline import (
+            build_embeddings, search_by_entities, search_topk,
+        )
+
+        seam = ModelSeam(embed_factory=seeded_embed_factory)
+        emb = build_embeddings(documents_df, models=seam).cache()
+        try:
+            rows = emb.select("vec_id", "doc_text").orderBy("vec_id").collect()
+            assert len(rows) > 50
+            for target in (rows[0], rows[len(rows) // 2]):
+                hits = search_topk(emb, target["doc_text"], 3, models=seam).collect()
+                assert hits[0]["vec_id"] == target["vec_id"]
+                assert hits[0]["similarity"] == pytest.approx(1.0)
+            words = rows[1]["doc_text"].split(" ")
+            (hit,) = search_by_entities(emb, words, 1, models=seam).collect()
+            assert hit["vec_id"] == rows[1]["vec_id"]
+        finally:
+            emb.unpersist()
 
 
 class TestMultimodalDecoderSeam:

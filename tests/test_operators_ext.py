@@ -1012,54 +1012,3 @@ class TestWebtextWave:
             for s in shards:
                 assert s["shard_tokens"] <= 4096 + 200
 
-
-class TestPdfPagesUdtf:
-    def test_udtf_matches_arrow_path_byte_for_byte(self, spark, pages_df):
-        """The real Python UDTF (functions/udtf_pages) and the production
-        Arrow path (pandas_udf + explode) must produce identical rows —
-        the UDTF exists for API-surface parity only; extraction keeps the
-        Arrow batch path (see the module docstring for why)."""
-        from pyspark.sql import functions as F
-
-        from medical_vector_database_ocr_ner_spark.functions.udtf_pages import (
-            register,
-        )
-        from medical_vector_database_ocr_ner_spark.operators.extraction import (
-            pdf_pages_udf,
-        )
-
-        pdfs = pages_df.where(F.expr("startswith(html, X'25504446')"))
-        assert pdfs.count() > 0, "fixture must contain pdf payloads"
-
-        register(spark)
-        pdfs.createOrReplaceTempView("pdf_pages_fixture")
-        udtf_rows = spark.sql(
-            "SELECT f.url, t.page_no, t.page_text, t.confidence "
-            "FROM pdf_pages_fixture f, LATERAL pdf_pages(f.html) t"
-        ).collect()
-
-        arrow_rows = (
-            pdfs.select(
-                "url",
-                F.posexplode(pdf_pages_udf(F.col("html"))).alias(
-                    "page_no", "page"
-                ),
-            )
-            .select(
-                "url",
-                "page_no",
-                F.col("page.page_text").alias("page_text"),
-                F.col("page.confidence").alias("confidence"),
-            )
-            .collect()
-        )
-
-        key = lambda r: (r["url"], r["page_no"])  # noqa: E731
-        assert sorted(
-            [(r["url"], r["page_no"], r["page_text"], r["confidence"])
-             for r in udtf_rows]
-        ) == sorted(
-            [(r["url"], r["page_no"], r["page_text"], r["confidence"])
-             for r in arrow_rows]
-        )
-        assert len(udtf_rows) == len({key(r) for r in udtf_rows})

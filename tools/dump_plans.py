@@ -250,8 +250,8 @@ SELECTED = [
     ("crawl_depth_bfs",
      "Pages scanned exactly once (edge aggregation, localCheckpointed); "
      "each of the 3 BFS relaxations is one join + one min-agg over the "
-     "O(hosts) graph — InMemoryTableScans, plan and lineage independent "
-     "of the iteration count."),
+     "O(hosts) graph — scans of localCheckpointed frames (Scan "
+     "ExistingRDD), plan and lineage independent of the iteration count."),
     ("grouping_sets_panel",
      "All four groupings through ONE Expand feeding a partial+final "
      "HashAggregate — one corpus scan, one Exchange, where four GROUP "
@@ -346,9 +346,10 @@ HEADER = """# PLANS — physical-plan evidence for the headline queries
 
 Regenerate with `python tools/dump_plans.py` (sf0.001 inputs; plan SHAPE
 is scale-invariant, AQE adjusts only the numbers). Each section states
-what the plan must show — the same properties are asserted in
-tests/test_spark_parity.py and tests/test_operators_ext.py, so drift
-fails CI before it reaches this file.
+what the plan must show. The properties are asserted in
+tests/test_spark_parity.py and tests/test_operators_ext.py; this file
+itself is regenerated by hand, and no test reads it, so a plan below is
+only as current as its last regeneration.
 """
 
 
