@@ -46,13 +46,14 @@ entries), the ``spark-core`` jar on the worker path (2 × 31–36 ms, 5,359
 entries) and py4j. That is about 170–260 ms per task before any document
 is read; on a 4-core host a 10-row identity task ran ~280 ms. With the
 finders dropped, the next task's invalidation has no archive to re-read,
-and the same task runs ~70 ms. The purge runs in one place: after the
-last batch of each Python stage, when the task has made every import it
-needs (``operators.extraction.map_rows`` — extraction, the multimodal
-decoders — and ``operators.extraction.embed_unique``, the embedding
-stage). Purging earlier is not enough: the lazy imports of a worker's
-first task rebuild a few finders (``pyspark.zip``, the ``spark-core``
-jar, py4j), and the worker's next task would re-read them (~40–50 ms).
+and the same task runs ~70 ms. The purge runs in one place:
+``operators.extraction.map_rows``, after the last batch of each
+partition, when the task has made every import it needs. Every batch
+Python stage runs through it — extraction, the multimodal decoders and
+the embedding stage (``operators.extraction.embed_unique``). Purging
+earlier is not enough: the lazy imports of a worker's first task
+rebuild a few finders (``pyspark.zip``, the ``spark-core`` jar, py4j),
+and the worker's next task would re-read them (~40–50 ms).
 
 The purge can go once workers no longer import from archives, or once
 the interpreter re-reads an invalidated archive lazily.

@@ -1,4 +1,4 @@
-"""Arrow-batched Python stages: ``map_rows`` and ``embed_unique``.
+"""Arrow-batched Python stages: ``map_rows`` and the passes built on it.
 
 Design for 100 TB (SURVEY.md §3.3/§4.2):
 
@@ -6,11 +6,11 @@ Design for 100 TB (SURVEY.md §3.3/§4.2):
   across Python UDFs, so ordering is structural in the pipeline builder).
 - ``map_rows`` is the one ``mapInPandas`` of the package: a per-row
   Python function over a few columns, with the other schema fields
-  passed through. Every stateless per-row Python pass runs through it:
-  extraction, the multimodal decoders and frame sampler, pdf page
-  expansion (``_pdf_pages_row``) and relational NER's raw candidates. A
-  1→N pass returns an array column that the caller explodes in the JVM
-  (SURVEY.md §2.9: no Python UDTFs). Extraction is ONE such pass doing
+  passed through. Every batch Python pass runs through it: extraction,
+  the embedding stage (``embed_unique``), the multimodal decoders and
+  frame sampler, pdf page expansion (``_pdf_pages_row``) and relational
+  NER's raw candidates. A 1→N pass returns an array column that the
+  caller explodes in the JVM (SURVEY.md §2.9: no Python UDTFs). Extraction is ONE such pass doing
   html→text→spans that DROPS the html bytes in its output — payload
   bytes cross the JVM↔Python Arrow boundary exactly once and never
   shuffle after it.
@@ -18,9 +18,11 @@ Design for 100 TB (SURVEY.md §3.3/§4.2):
   partition before the first batch (worker-cached for named factories,
   mirroring the reference's lru_cache model singletons,
   app/services/vector_service.py:46-52), and the worker's archive finders
-  drop after the last batch (core/models.py).
+  drop after the last batch (core/models.py); this is the package's one
+  purge site.
 - ``embed_unique`` is the embedding stage: the dedup on ``vec_id`` and
-  the embedding in one ``mapInArrow`` pass, so neither holds a Tungsten
+  the embedding in one ``map_rows`` pass (``_embed_first_row`` keeps
+  per-partition state of the keys seen), so neither holds a Tungsten
   page.
 - Per-row failures become ``status='failed'`` + error_message rows, the
   quarantine side-output of reference scripts/batch_process.py:115-126.
@@ -35,6 +37,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import functions as F
@@ -143,13 +146,24 @@ def _extract_row(models, kind: str, html: bytes | None, reject_reason: str | Non
         return None, None, None, "failed", f"{type(exc).__name__}: {exc}"[:1000]
 
 
+def _embed_first_row(state, key, text: str | None):
+    """(embedding,): the seam's float32 vector of ``text`` for the first
+    row of ``key`` in the partition, None for every later row."""
+    models, seen = state
+    if key in seen:
+        return (None,)
+    seen.add(key)
+    return (np.asarray(models.embed(text or ""), dtype=np.float32),)
+
+
 def embed_unique(
     df: "DataFrame", key: str, text: str, seam=None
 ) -> "DataFrame":
     """The first row of each ``key`` in its partition, with ``embedding``
-    (the seam's float32 vector of ``text``) appended, in ONE
-    ``mapInArrow`` pass. ``df`` must be hash-partitioned on ``key``, so
-    all rows of a key meet in one partition; the row kept is the one
+    (the seam's float32 vector of ``text``) appended: one ``map_rows``
+    pass of ``_embed_first_row`` that embeds only a key's first row, then
+    a filter on the embedding. ``df`` must be hash-partitioned on ``key``,
+    so all rows of a key meet in one partition; the row kept is the one
     ``dropDuplicates([key])`` keeps over that partitioning, the key's
     first in partition order.
 
@@ -160,41 +174,17 @@ def embed_unique(
     concurrent tasks that was 512 MB of humongous arrays, still in the
     old generation after the stage, and G1 grew the heap around them by
     a different amount each run (BENCH.md, round 11). Here the other
-    columns pass through as Arrow arrays, untouched, and the seam
-    resolves once per partition."""
-    import numpy as np
+    columns pass through untouched, and the seam resolves once per
+    partition."""
+    from ..core.models import DEFAULT_SEAM
 
     schema = StructType(
         [*df.schema.fields, StructField("embedding", ArrayType(FloatType()))]
     )
-
-    def run(batches):
-        import pyarrow as pa
-
-        from ..core.models import DEFAULT_SEAM, drop_archive_finders
-
-        models = (seam or DEFAULT_SEAM).resolve()
-        seen: set = set()
-        for batch in batches:
-            first = []
-            for i, k in enumerate(batch.column(key).to_pylist()):
-                if k not in seen:
-                    seen.add(k)
-                    first.append(i)
-            batch = batch.take(pa.array(first, pa.int64()))
-            vecs = [
-                np.asarray(models.embed(t or ""), dtype=np.float32)
-                for t in batch.column(text).to_pylist()
-            ]
-            offsets = np.cumsum([0, *map(len, vecs)], dtype=np.int32)
-            values = np.concatenate(vecs) if vecs else np.empty(0, np.float32)
-            embedding = pa.ListArray.from_arrays(pa.array(offsets), pa.array(values))
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns, embedding], names=schema.names
-            )
-        drop_archive_finders()
-
-    return df.mapInArrow(run, schema=schema)
+    return map_rows(
+        df, schema, (key, text), _embed_first_row,
+        lambda: ((seam or DEFAULT_SEAM).resolve(), set()),
+    ).where(F.col("embedding").isNotNull())
 
 
 def _pdf_pages_row(_, payload: bytes | None):

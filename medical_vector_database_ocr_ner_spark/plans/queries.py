@@ -1359,6 +1359,11 @@ DRIVER_PRIORITY: list[str] = [
     # column (operators.extraction._pdf_pages_row) exploded in the JVM,
     # in place of the scalar pandas UDF pdf_pages_udf
     "pdf_page_explode",
+    # tier 1 — stale since round 15: curation_funnel aliases the two sides
+    # of its dedup join-back, so the ck term is a real predicate
+    # (k.ck = s.ck AND k.keeper_id = s.doc_id, as its oracle has it)
+    # instead of the trivially true ck = ck of one attribute
+    "curation_funnel",
     # tier 1b — fingerprint unmoved but a helper they run through
     # changed (q_simhash16; IvfIndex / batch_topk / embedding_cosine_dups
     # / search_topk on similarity.dot, now SQL-rendered from dot_sql;
@@ -1395,25 +1400,25 @@ DRIVER_PRIORITY: list[str] = [
     # hash-partitions its rows on vec_id at operators.extraction.stage_width
     # and dedups and embeds them in operators.extraction.embed_unique
     # (which row of a duplicated vec_id is kept may change; every vec_id of
-    # its top-10 has one url at sf0.001, sf0.01 and sf0.1); search_topk
-    # now embeds the query through the seam's embed factory, which is
-    # core.embed_text for the default seam it runs with
+    # its top-10 has one url at sf0.001, sf0.01 and sf0.1), itself now a
+    # map_rows pass, so the worker's archive finders drop in one place;
+    # search_topk now embeds the query through the seam's embed factory,
+    # which is core.embed_text for the default seam it runs with
     "semantic_search",
     "pages_extraction",
     "multimodal_image_features",
-    # tier 2 — r4 single-greens, registry order; the round-10 stale set
-    # and pdf_page_explode took the places of the other 17
-    "hll_distinct_tokens",
+    # tier 2 — empty this round: the round-10 stale set, pdf_page_explode
+    # and curation_funnel took the places of all 18 r4 single-greens
     # tier 3 — empty this round: both headline anchors (pages_extraction,
     # semantic_search) sit in tier 1b
     # ---- below the 50-row cut: everything else ----
-    # the remaining r4 singles (cms_heavy_hitters, intra_doc_repetition,
-    # tfidf_distinctive_terms, unigram_lm_doc_score, interval_overlap_join,
-    # weighted_sample, length_quantile_sketch, dsir_importance_weights,
-    # pmi_bigrams, source_mirror_detect, partition_checksums,
-    # pit_snapshot_lookup, epoch_shuffle_assign, session_window_stats,
-    # cdc_chunk_dedup, trimmed_mean_length, lang_id_confusion,
-    # unpivot_doc_stats, outer_explode_audit, curation_funnel), the r5
+    # the remaining r4 singles (hll_distinct_tokens, cms_heavy_hitters,
+    # intra_doc_repetition, tfidf_distinctive_terms, unigram_lm_doc_score,
+    # interval_overlap_join, weighted_sample, length_quantile_sketch,
+    # dsir_importance_weights, pmi_bigrams, source_mirror_detect,
+    # partition_checksums, pit_snapshot_lookup, epoch_shuffle_assign,
+    # session_window_stats, cdc_chunk_dedup, trimmed_mean_length,
+    # lang_id_confusion, unpivot_doc_stats, outer_explode_audit), the r5
     # singles (error_context_outer) and the multi-green anchors; local
     # gate + pytest still cover all of them every session
 ]

@@ -6072,9 +6072,11 @@ def q_curation_funnel(spark, sf):
         .groupBy("ck")
         .agg(F.min("doc_id").alias("keeper_id"))
     )
-    final = staged.join(
-        keepers,
-        (staged.ck == keepers.ck) & (staged.doc_id == keepers.keeper_id),
+    s, k = staged.alias("s"), keepers.alias("k")
+    final = s.join(
+        k,
+        (F.col("k.ck") == F.col("s.ck"))
+        & (F.col("k.keeper_id") == F.col("s.doc_id")),
         "left",
     ).withColumn("pass_dedup", F.col("keeper_id").isNotNull())
     return final.groupBy("lang").agg(
@@ -6439,7 +6441,6 @@ EXT_QUERIES.update(WEB_QUERIES_W)
 
 
 _MLR_MAXDOC = 150   # truth is quadratic-ish; same cap as ngram_jaccard_pairs
-_MLR_TRUTH_J2 = (1, 2)  # J >= 1/2, held as the integer cross-mult below
 
 
 def q_minhash_lsh_recall(spark, sf):

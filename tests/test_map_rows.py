@@ -1,6 +1,6 @@
 """``operators.extraction.map_rows``: the one mapInPandas stage that runs
-every stateless per-row Python pass (extraction, image and audio decode,
-video frame sampling, pdf page expansion, relational NER's raw
+every batch Python pass (extraction, the embedding stage, image and audio
+decode, video frame sampling, pdf page expansion, relational NER's raw
 candidates), and the allowlist of the package's other Python sites."""
 
 import ast
@@ -29,10 +29,6 @@ PYTHON_SITE_NAMES = {"mapInPandas", "mapInArrow", "pandas_udf", "udtf", "udf"}
 # so the list can only shrink.
 PYTHON_SITES_ALLOWED = {
     "operators/extraction.py:map_rows": "the one mapInPandas",
-    "operators/extraction.py:embed_unique": (
-        "first row per key and its embedding in one mapInArrow pass, with "
-        "no Tungsten page"
-    ),
     "functions/json_guard.py:json_violation_udf": (
         "evaluated inside a when() over a masked column: only payloads the "
         "native tier left unsettled cross to Python"

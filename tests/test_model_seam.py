@@ -411,10 +411,11 @@ def _zip_finders():
 
 
 class TestArchiveFinders:
-    """Each Python stage (``map_rows``, ``embed_unique``) drops the
-    worker's ``zipimporter`` finders after its last batch, so the next
-    task's ``importlib.invalidate_caches()`` re-reads no archive
-    (core/models.py module docstring)."""
+    """``map_rows``, which runs every batch Python stage (extraction, the
+    embedding stage ``embed_unique``), drops the worker's ``zipimporter``
+    finders after its last batch, so the next task's
+    ``importlib.invalidate_caches()`` re-reads no archive (core/models.py
+    module docstring)."""
 
     def test_drop_keeps_archive_importable(self, tmp_path, monkeypatch):
         import sys

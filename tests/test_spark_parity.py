@@ -243,9 +243,15 @@ class TestPlanShape:
 
     def test_semantic_search_single_extraction_stage(self, spark, sf01_dir):
         """Regression guard for the double-extraction bug: the end-to-end
-        search plan must contain EXACTLY ONE MapInPandas extraction stage
-        (hydration columns carried through the embedding build, never
-        joined back against the unmaterialized extraction plan).
+        search plan must contain EXACTLY ONE extraction stage and one scan
+        of the pages (hydration columns carried through the embedding
+        build, never joined back against the unmaterialized extraction
+        plan).
+
+        Both Python stages are ``map_rows`` passes, so the plan holds two
+        MapInPandas nodes: the extraction and the embedding
+        (``embed_unique``). A second extraction branch would show 3
+        MapInPandas nodes and 2 parquet scans.
 
         Uses the sf0.01 pages table: the sf0.001 plan is identical to the
         session-cached documents_df fixture subtree, and the cache manager
@@ -254,7 +260,8 @@ class TestPlanShape:
 
         df = QUERIES["semantic_search"].fn(spark, sf01_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("MapInPandas") == 1, plan[:1500]
+        assert plan.count("MapInPandas") == 2, plan[:1500]
+        assert plan.count("FileScan parquet") == 1, plan[:1500]
 
     def test_q5_join_broadcasts_dimensions(self, spark, sf001_dir):
         """The 6-table join must broadcast every dimension: exactly one

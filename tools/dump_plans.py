@@ -22,8 +22,10 @@ SELECTED = [
      "salted Exchange BELOW MapInPandas — cheap codegen work runs before "
      "bytes move or reach Python."),
     ("semantic_search",
-     "Exactly one MapInPandas (single extraction pass), one MapInArrow "
-     "(first row per vec_id, then embed), TakeOrderedAndProject top-k."),
+     "ONE FileScan and exactly two MapInPandas, both map_rows passes: "
+     "the single extraction pass, then the embedding stage (first row "
+     "per vec_id, then embed) and its filter; TakeOrderedAndProject "
+     "top-k."),
     ("knn_hydrated",
      "JVM-side dot product, TakeOrderedAndProject, broadcast hydration "
      "join."),
