@@ -4,9 +4,11 @@
   (``dot`` → TakeOrderedAndProject). The correctness baseline, and the
   one exact top-k: ``plans.pipeline.search_topk`` ranks a whole table
   through it and ``IvfIndex.search`` its probed candidates.
-- ``IvfIndex``: inverted-file ANN — deterministic centroids, one-shuffle
-  partition assignment, searches probe only ``nprobe`` partitions. The
-  100 TB path: the scan prunes to nprobe/n_centroids of the corpus.
+- ``IvfIndex``: inverted-file ANN as lazy plans — a one-row codebook of
+  deterministic centroids, a map-side assignment and a probe ranking
+  against a one-row query relation; searches score only ``nprobe``
+  centroids' vectors. The 100 TB path: the scan prunes to
+  nprobe/n_centroids of the corpus. No collect, no cache.
 
 Vectors are assumed unit-normalized (build_embeddings guarantees it), so
 dot product == cosine similarity."""
@@ -56,22 +58,19 @@ def dot(a: str, b: str) -> "Column":
     return F.expr(dot_sql(a, b))
 
 
-def dot_lit(vec_col: str, query_vec: list[float]) -> "Column":
-    """``dot`` of a vector column against a literal query vector."""
-    return dot(vec_col, vec_sql(query_vec))
-
-
 def brute_force_topk(
-    emb: "DataFrame", query_vec: list[float], k: int = 10,
+    emb: "DataFrame", query_vec: str, k: int = 10,
     vec_col: str = "embedding", id_col: str = "vec_id",
     extra_cols: list[str] | None = None,
 ) -> "DataFrame":
     """Exact top-k: distributed TakeOrderedAndProject, no global sort.
-    ``extra_cols`` ride along after ``similarity`` (J3 hydration)."""
+    ``query_vec`` is a SQL array expression: a ``vec_sql`` literal or a
+    column of ``emb``. ``extra_cols`` ride along after ``similarity``
+    (J3 hydration)."""
     return (
         emb.select(
             F.col(id_col),
-            dot_lit(vec_col, query_vec).alias("similarity"),
+            dot(vec_col, query_vec).alias("similarity"),
             *[F.col(c) for c in (extra_cols or [])],
         )
         .orderBy(F.desc("similarity"), F.asc(id_col))
@@ -128,89 +127,79 @@ def batch_topk(
 
 
 class IvfIndex:
-    """Inverted-file index: deterministic centroids (the first
-    ``n_centroids`` vectors by id, the only k×dim data that reaches the
-    driver); every vector assigned to its best centroid once (one argmax
-    column expression), stored partitioned by centroid. Queries score only
-    nprobe centroid partitions.
+    """Inverted-file index as three lazy plans, with no driver state:
 
-    At 10^12 vectors: assignment is a map-side pass; the search reads
-    nprobe/n_centroids of the data — partition pruning does the rest when
-    the assignment table is written partitioned by ``centroid_id``."""
+    - ``codebook``: ONE row, ``cents: array<struct<cid, cvec>>``, the
+      first ``n_centroids`` vectors by id (deterministic centroids);
+    - ``assigned``: every vector with its best centroid (``centroid_id``),
+      one argmax column expression against the broadcast codebook;
+    - ``probes(query)``: every centroid ranked against the query vector.
+
+    ``search`` scores only the vectors of the ``nprobe`` best centroids.
+    Nothing is collected or cached: each action plans codebook,
+    assignment and probes together. At 10^12 vectors the assignment is a
+    map-side pass, and once ``materialize`` has written it partitioned by
+    ``centroid_id`` a search reads nprobe/n_centroids of the files."""
 
     def __init__(
         self, emb: "DataFrame", n_centroids: int = 16,
         vec_col: str = "embedding", id_col: str = "vec_id",
     ) -> None:
         self.vec_col, self.id_col = vec_col, id_col
-        self.n_centroids = n_centroids
-        self.centroids = [
-            (int(i), [float(x) for x in v])
-            for i, v in (
-                emb.orderBy(id_col).limit(n_centroids)
-                .select(id_col, vec_col).collect()
-            )
-        ]
-        self.assigned = self._assign(emb).cache()
-
-    def _centroid_df(self, spark) -> "DataFrame":
-        """ONE row holding array<struct<cid,cvec>> — centroids as broadcast
-        DATA, not literal expressions. A literal CASE/array encoding puts
-        n_centroids × dim nodes in the plan tree (≈400k at 1024×384 —
-        Catalyst analysis blows up long before execution); a 1-row broadcast
-        relation keeps the plan O(1) no matter the codebook size."""
-        rows = [([(int(cid), [float(x) for x in cvec])
-                  for cid, cvec in self.centroids],)]
-        return spark.createDataFrame(
-            rows, "cents: array<struct<cid: int, cvec: array<double>>>"
+        # centroids as broadcast DATA, not literal expressions: a literal
+        # CASE/array encoding puts n_centroids × dim nodes in the plan tree
+        # (≈400k at 1024×384); a 1-row relation keeps the plan O(1)
+        self.codebook = emb.orderBy(id_col).limit(n_centroids).agg(
+            F.collect_list(F.struct(
+                F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"),
+            )).alias("cents")
         )
-
-    def _assign(self, emb: "DataFrame") -> "DataFrame":
-        """Map-side argmax assignment via a broadcast join against the
-        1-row centroid table: BroadcastNestedLoopJoin with a single build
-        row adds one column and multiplies nothing, then per-row
-        transform+array_max picks the best centroid (ties → lowest cid,
-        matching the previous sequential-fold semantics). No shuffle; one
-        pass; scales to any n_centroids × dim."""
-        joined = emb.join(F.broadcast(self._centroid_df(emb.sparkSession)))
+        # map-side argmax: BroadcastNestedLoopJoin with a single build row
+        # adds one column and multiplies nothing, then per-row
+        # transform+array_max picks the best centroid (ties → lowest cid).
+        # No shuffle; one pass; scales to any n_centroids × dim. The
+        # coalesce makes centroid_id non-nullable: a join on a nullable
+        # key infers isnotnull(centroid_id), which the optimizer pushes
+        # into this join as a condition that computes the argmax twice
         best = F.expr(
             "array_max(transform(cents, c -> named_struct("
-            f"'score', {dot_sql(self.vec_col, 'c.cvec')}, 'ncid', -c.cid)))"
+            f"'score', {dot_sql(vec_col, 'c.cvec')}, 'ncid', -c.cid)))"
         )
-        return joined.select(
-            self.id_col, self.vec_col,
-            (-best["ncid"]).alias("centroid_id"),
+        self.assigned = emb.join(F.broadcast(self.codebook)).select(
+            id_col, vec_col,
+            F.coalesce(-best["ncid"], F.lit(-1)).alias("centroid_id"),
         )
 
     def materialize(self, path: str) -> None:
         """Write the assignment table partitioned by ``centroid_id`` and
-        re-point the index at the read-back: ``search``'s ``isin`` filter
-        on the partition column then resolves as parquet PARTITION PRUNING
-        (PartitionFilters in the scan) — at 10^12 vectors only
-        nprobe/n_centroids of the files are ever listed, opened, or read."""
-        spark = self.assigned.sparkSession
+        re-point the index at the read-back: ``search``'s join on the
+        partition column then prunes the scan at run time (a dynamic
+        pruning filter that reuses the probes' broadcast) — at 10^12
+        vectors only nprobe/n_centroids of the files are ever read. AQE
+        drops that filter when a cached relation feeds the probes (the
+        codebook's source or the query), so those stay uncached."""
         self.assigned.write.mode("overwrite").partitionBy(
             "centroid_id"
         ).parquet(path)
-        # release the cached in-memory assignment (id + full vectors):
-        # the parquet read-back replaces it, and an orphaned reference
-        # would pin corpus-sized blocks in executor storage for the
-        # session lifetime
-        self.assigned.unpersist()
-        self.assigned = spark.read.parquet(path)
+        self.assigned = self.assigned.sparkSession.read.parquet(path)
 
-    def search(self, query_vec: list[float], k: int = 10, nprobe: int = 4) -> "DataFrame":
-        scored_centroids = sorted(
-            self.centroids,
-            key=lambda c: -sum(a * b for a, b in zip(c[1], query_vec)),
+    def probes(self, query: "DataFrame") -> "DataFrame":
+        """Every centroid ranked against the ``qvec`` of the one-row
+        ``query``: ``probe_rank`` 0 is the best dot, ties go to the lowest
+        cid; ``qvec`` rides along for the candidates' scores."""
+        ranked = F.expr(
+            "posexplode(sort_array(transform(cents, c -> named_struct("
+            f"'nd', -{dot_sql('qvec', 'c.cvec')}, 'cid', c.cid))))"
         )
-        probe_ids = [cid for cid, _ in scored_centroids[:nprobe]]
-        candidates = self.assigned.where(F.col("centroid_id").isin(probe_ids))
-        return brute_force_topk(candidates, query_vec, k, self.vec_col, self.id_col)
+        return self.codebook.crossJoin(query.select("qvec")).select(
+            ranked.alias("probe_rank", "p"), "qvec",
+        ).select("probe_rank", F.col("p.cid").alias("centroid_id"), "qvec")
 
-    def recall_at_k(self, emb: "DataFrame", query_vec: list[float],
-                    k: int = 10, nprobe: int = 4) -> float:
-        exact = {r[self.id_col] for r in brute_force_topk(
-            emb, query_vec, k, self.vec_col, self.id_col).collect()}
-        approx = {r[self.id_col] for r in self.search(query_vec, k, nprobe).collect()}
-        return len(exact & approx) / max(len(exact), 1)
+    def search(self, query: "DataFrame", k: int = 10, nprobe: int = 4) -> "DataFrame":
+        """Top-k of the vectors assigned to the ``nprobe`` best centroids
+        for the one-row ``query`` relation (column ``qvec``)."""
+        probed = self.probes(query).where(F.col("probe_rank") < nprobe)
+        candidates = self.assigned.join(
+            F.broadcast(probed.drop("probe_rank")), "centroid_id"
+        )
+        return brute_force_topk(candidates, "qvec", k, self.vec_col, self.id_col)

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions import columns as FX
 from ..operators.extraction import embed_unique, stage_width
-from ..operators.similarity import brute_force_topk
+from ..operators.similarity import brute_force_topk, vec_sql
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
@@ -109,7 +109,7 @@ def search_topk(
     from ..core.models import DEFAULT_SEAM, resolve_factory
 
     embed = resolve_factory((models or DEFAULT_SEAM).embed_factory, embed_text)
-    qvec = [float(x) for x in embed(query_text)]
+    qvec = vec_sql(embed(query_text))
     return brute_force_topk(embeddings, qvec, k, extra_cols=extra_cols)
 
 

@@ -1065,13 +1065,13 @@ FROM dots WHERE cosine >= 0.3
 
 def q_ivf_topk(spark, sf):
     """IVF ANN search (deterministic centroids, nprobe=4 of 8 partitions):
-    the at-scale ANN path; recall vs brute force asserted in pytest."""
+    the at-scale ANN path; recall vs brute force asserted in pytest.
+    The query vector is a one-row relation, so the build runs no job."""
     from ..operators.similarity import IvfIndex
 
     emb = _t(spark, sf, "embeddings")
-    qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    idx = IvfIndex(emb, n_centroids=8)
-    res = idx.search(qvec, k=10, nprobe=4)
+    q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
+    res = IvfIndex(emb, n_centroids=8).search(q, k=10, nprobe=4)
     return res.select("vec_id", F.round("similarity", 4).alias("similarity"))
 
 
@@ -1364,13 +1364,21 @@ DRIVER_PRIORITY: list[str] = [
     # (k.ck = s.ck AND k.keeper_id = s.doc_id, as its oracle has it)
     # instead of the trivially true ck = ck of one attribute
     "curation_funnel",
+    # tier 1 — stale since round 16: IvfIndex is lazy plans with no
+    # driver state (a one-row codebook relation, probes ranked in the
+    # plan, no cache), ivf_topk takes its query vector as a one-row
+    # relation instead of a collect(), and ivf_nprobe_sweep scores every
+    # probed vector once and ranks each nprobe with one row_number window
+    # instead of running four searches
+    "ivf_topk",
+    "ivf_nprobe_sweep",
     # tier 1b — fingerprint unmoved but a helper they run through
-    # changed (q_simhash16; IvfIndex / batch_topk / embedding_cosine_dups
+    # changed (q_simhash16; batch_topk / embedding_cosine_dups
     # / search_topk on similarity.dot, now SQL-rendered from dot_sql;
     # similarity.brute_force_topk is the one exact top-k, the scorer of
-    # semantic_search through search_topk and of the ivf_* queries through
-    # IvfIndex.search, with the same optimized plans; IvfIndex has lost
-    # its unused Lloyd's training path, train_iters, which no query set);
+    # semantic_search through search_topk, with the same optimized plans;
+    # ivf_recall_at_k runs q_ivf_topk, now the lazy IvfIndex plan of the
+    # round-16 block above, with the same rows);
     # the tool only sees the query's own source, so these are hand-audited.
     # The same blind spot covers the round-10 helpers
     # functions/columns.url_host_col and url_page_no_col,
@@ -1383,9 +1391,7 @@ DRIVER_PRIORITY: list[str] = [
     "knn_hydrated",
     "simhash_band_pairs",
     "simhash_hot_bucket_split",
-    "ivf_topk",
     "ivf_recall_at_k",
-    "ivf_nprobe_sweep",
     "embedding_near_dups",
     "ann_batch_topk",
     # semantic_search, pages_extraction and multimodal_image_features now

@@ -6208,42 +6208,48 @@ def q_ivf_nprobe_sweep(spark, sf):
     """The nprobe/recall tuning curve — the table every IVF deployment
     publishes before picking its operating point (recall@10 vs fraction
     of the corpus probed). Composes ivf_recall_at_k over nprobe ∈
-    {1,2,4,8} against ONE shared index and ONE brute-force truth set:
-    the assignment table is built (and cached) once, each sweep point
-    reads only nprobe/8 of it via the centroid partition filter, and
-    the eval joins are k-row relations, so the whole sweep costs ~the
-    brute-force pass plus Σ nprobe/8 index reads. nprobe=8 probes every
+    {1,2,4,8} against ONE index and ONE brute-force truth set, in one
+    lazy plan: every probed vector is scored once, meets the sweep values
+    in an explode filtered on ``probe_rank < nprobe``, and one
+    ``row_number`` window per nprobe keeps its top 10 (four separate
+    searches re-scan and re-score the corpus). nprobe=8 probes every
     partition, so its recall is 100% by construction (pinned in pytest
     along with monotonicity in nprobe). At 10^12 vectors the same shape
     runs over a held-out query sample with the assignment table
     materialized partition-pruned (IvfIndex.materialize)."""
-    from ..operators.similarity import IvfIndex
+    from ..operators.similarity import IvfIndex, dot
     from .queries import q_ann_topk_cosine
 
     emb = _t(spark, sf, "embeddings")
-    qvec = [
-        float(x)
-        for x in emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    ]
+    q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
     idx = IvfIndex(emb, n_centroids=8)
+    sweep = F.lit(list(_NPROBE_SWEEP)).cast("array<bigint>")
+    probed = (
+        idx.assigned.join(F.broadcast(idx.probes(q)), "centroid_id")
+        .select("vec_id", "probe_rank",
+                dot("embedding", "qvec").alias("similarity"),
+                F.explode(sweep).alias("nprobe"))
+        .where(F.col("probe_rank") < F.col("nprobe"))
+    )
+    top = Window.partitionBy("nprobe").orderBy(
+        F.desc("similarity"), F.asc("vec_id")
+    )
     truth = q_ann_topk_cosine(spark, sf).select("vec_id")
-    out = None
-    for p in _NPROBE_SWEEP:
-        res = idx.search(qvec, k=10, nprobe=p).select("vec_id")
-        r = (
-            res.join(truth, "vec_id")
-            .agg(F.count("*").alias("n_overlap"))
-            .select(
-                F.lit(p).cast("bigint").alias("nprobe"),
-                F.lit(10).cast("bigint").alias("k"),
-                F.col("n_overlap").cast("bigint").alias("n_overlap"),
-                F.expr("n_overlap * 100 div 10").cast("bigint").alias(
-                    "recall_pct"
-                ),
-            )
+    # every sweep point keeps its row: the query is vector 0, which ranks
+    # first in the truth and in its own best probe (unit vectors)
+    return (
+        probed.withColumn("rk", F.row_number().over(top))
+        .where(F.col("rk") <= 10)
+        .join(F.broadcast(truth), "vec_id")
+        .groupBy("nprobe")
+        .agg(F.count("*").alias("n_overlap"))
+        .select(
+            "nprobe",
+            F.lit(10).cast("bigint").alias("k"),
+            "n_overlap",
+            F.expr("n_overlap * 100 div 10").alias("recall_pct"),
         )
-        out = r if out is None else out.unionAll(r)
-    return out
+    )
 
 
 def _oracle_nprobe_sweep() -> str:

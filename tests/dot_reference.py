@@ -3,8 +3,9 @@
 This is the Column-lambda form the package used before ``dot`` rendered
 SQL text: ``F.aggregate`` over ``F.zip_with`` with Python lambdas, and the
 literal query vector built as ``F.array`` of one ``F.lit`` per element. It
-is kept here, unchanged, as the oracle: ``similarity.dot_lit`` must give
-bit-identical scores (or the same null) for every input.
+is kept here, unchanged, as the oracle: ``similarity.dot`` of a
+``vec_sql`` literal must give bit-identical scores (or the same null) for
+every input.
 """
 
 from __future__ import annotations

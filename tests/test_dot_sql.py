@@ -1,8 +1,9 @@
 """``similarity.dot`` renders one SQL definition of the vector score.
 
-- Differential: ``dot_lit`` against the Column-lambda form it replaced
-  (kept in ``tests/dot_reference.py``), bit for bit, on float32 and
-  float64 rows, special values, mismatched lengths and the empty vector.
+- Differential: ``dot`` of a ``vec_sql`` literal against the
+  Column-lambda form it replaced (kept in ``tests/dot_reference.py``),
+  bit for bit, on float32 and float64 rows, special values, mismatched
+  lengths and the empty vector.
 - Plan shape: the query vector's ``split``/``CAST`` string literal is
   constant-folded away and search still compiles to
   ``TakeOrderedAndProject``.
@@ -17,7 +18,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from medical_vector_database_ocr_ner_spark.operators.similarity import (
-    dot_lit,
+    dot,
     dot_sql,
     vec_sql,
 )
@@ -40,7 +41,7 @@ def _assert_same_scores(spark, rows, elem_type, q):
     got = df.select(
         "id",
         dot_reference.dot_lit(F.col("e"), q).alias("want"),
-        dot_lit("e", q).alias("got"),
+        dot("e", vec_sql(q)).alias("got"),
     ).collect()
     assert len(got) == len(rows)
     for r in got:
@@ -87,13 +88,13 @@ class TestDotAgainstReference:
         _assert_same_scores(spark, rows, elem_type, [0.25, 3.0])
 
     def test_empty_query_vector(self, spark):
-        """``dot_lit(col, [])`` is null against a non-empty row and 0.0
+        """``dot(col, vec_sql([]))`` is null against a non-empty row and 0.0
         against ``[]``, as before (``split('', ',')`` would be one empty
         string and fail the cast under ANSI)."""
         assert vec_sql([]) == "CAST(array() AS ARRAY<DOUBLE>)"
         _assert_same_scores(spark, [[], [1.0], [0.0, 2.0]], "float", [])
         df = spark.createDataFrame([([],), ([1.0],)], "e array<float>")
-        got = [r[0] for r in df.select(dot_lit("e", [])).collect()]
+        got = [r[0] for r in df.select(dot("e", vec_sql([]))).collect()]
         assert got == [0.0, None]
 
     def test_float32_embeddings(self, spark, sf001_dir):
@@ -102,7 +103,7 @@ class TestDotAgainstReference:
         got = emb.select(
             "vec_id",
             dot_reference.dot_lit(F.col("embedding"), q).alias("want"),
-            dot_lit("embedding", q).alias("got"),
+            dot("embedding", vec_sql(q)).alias("got"),
         ).collect()
         assert got
         assert all(_bits(r["got"]) == _bits(r["want"]) for r in got)
@@ -147,7 +148,7 @@ class TestSearchPlan:
 
         def commands(dim):
             del sent[:]
-            dot_lit("embedding", [0.125] * dim).alias("similarity")
+            dot("embedding", vec_sql([0.125] * dim)).alias("similarity")
             return len(sent)
 
         commands(8)  # warm the JVM view's class lookups

@@ -3,8 +3,7 @@ query function returns a plan without running a Spark job.
 
 The builds run in their own Spark session (this file as a script, in a
 subprocess): building the CC, HITS and BFS queries leaves persisted RDDs
-behind, and the IVF queries leave ``IvfIndex.assigned`` cache entries,
-which the other tests of the shared session would see.
+behind, which the other tests of the shared session would see.
 
 Run directly, from the repo root, to print each query's build-time job
 count as one JSON line: ``python tests/test_lazy_build.py SF_DIR``, where
@@ -24,7 +23,6 @@ _CKPT = (
     "sf0.1 on 4 cores the build plus collect runs about 2x slower without "
     "them, and localCheckpoint(eager=False) still runs jobs under AQE"
 )
-_IVF = "IvfIndex collects its centroids and the query collects its query vector"
 
 # query -> why building it runs Spark jobs. Each entry must still run at
 # least one job, so the list can only shrink.
@@ -33,9 +31,6 @@ BUILD_JOBS_ALLOWED = {
     "cluster_keep_best": _CC,
     "hits_hosts": _CKPT,
     "crawl_depth_bfs": _CKPT,
-    "ivf_topk": _IVF,
-    "ivf_recall_at_k": _IVF,
-    "ivf_nprobe_sweep": _IVF,
 }
 
 

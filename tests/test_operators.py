@@ -91,24 +91,28 @@ class TestSimilarity:
             IvfIndex, brute_force_topk,
         )
 
-        qvec = [float(x) for x in emb.where("vec_id = 7").collect()[0]["embedding"]]
+        q = emb.where("vec_id = 7").select(F.col("embedding").alias("qvec"))
         idx = IvfIndex(emb, n_centroids=8)
+        exact = {r["vec_id"] for r in
+                 brute_force_topk(emb.crossJoin(q), "qvec", 10).collect()}
+
+        def search(nprobe):
+            return {r["vec_id"] for r in
+                    idx.search(q, k=10, nprobe=nprobe).collect()}
+
         # full probe == brute force (sanity: IVF partitions cover everything)
-        assert idx.recall_at_k(emb, qvec, k=10, nprobe=8) == 1.0
+        assert search(8) == exact
         # partial probe keeps decent recall and must contain the query itself
-        got = {r["vec_id"] for r in idx.search(qvec, k=10, nprobe=3).collect()}
+        got = search(3)
         assert 7 in got
-        assert idx.recall_at_k(emb, qvec, k=10, nprobe=3) >= 0.5
+        assert len(exact & got) / len(exact) >= 0.5
 
     def test_ivf_prunes_partitions(self, emb):
         from medical_vector_database_ocr_ner_spark.operators.similarity import IvfIndex
 
         idx = IvfIndex(emb, n_centroids=8)
         total = idx.assigned.count()
-        qvec = [float(x) for x in emb.where("vec_id = 0").collect()[0]["embedding"]]
-        probed = idx.assigned.where(
-            F.col("centroid_id").isin([c for c, _ in idx.centroids[:2]])
-        ).count()
+        probed = idx.assigned.where("centroid_id IN (0, 1)").count()
         assert probed < total  # search space actually shrinks
 
     def test_ivf_assignment_plan_scales_with_codebook(self, spark):
@@ -136,6 +140,14 @@ class TestSimilarity:
         assert "BroadcastNestedLoopJoin" in plan
         # literal encoding would be ~megabytes of plan text at 256×384
         assert len(plan) < 20_000, f"plan blew up: {len(plan)} chars"
+        # a join on centroid_id infers no isnotnull filter, which would
+        # be pushed into the assignment join and run the argmax twice
+        assert not idx.assigned.schema["centroid_id"].nullable
+        joined = idx.assigned.join(
+            spark.range(2).withColumnRenamed("id", "centroid_id"), "centroid_id"
+        )
+        optimized = joined._jdf.queryExecution().optimizedPlan().toString()
+        assert optimized.count("array_max(") == 1
         # every vector got a real centroid and the codebook is fully used
         n_assigned = idx.assigned.where(F.col("centroid_id") >= 0).count()
         assert n_assigned == 300
@@ -157,23 +169,53 @@ class TestSimilarity:
         rows = {r["vec_id"]: r["centroid_id"] for r in idx.assigned.collect()}
         assert rows[0] == 0 and rows[1] == 0
 
-    def test_ivf_materialize_partition_pruning(self, emb, tmp_path):
+    def test_ivf_materialize_partition_pruning(self, spark, emb, tmp_path):
         """materialize() re-points search at a centroid-partitioned parquet
-        table: the nprobe isin filter must show up as PartitionFilters in
-        the scan (files outside probed centroids never read)."""
+        table: the join on the probed centroids must prune the scan at run
+        time (a dynamic pruning filter that AQE keeps in the final plan),
+        so files outside the probed centroids are never read.
+
+        The index is built over an uncached copy of the fixture: Spark 4.1
+        plans the dynamic filter only by reusing the join's broadcast, and
+        AQE drops it (``dynamicpruningexpression(true)``) when a cached
+        relation feeds the broadcast side, as in any join."""
         from medical_vector_database_ocr_ner_spark.operators.similarity import (
             IvfIndex,
         )
 
+        emb.write.parquet(str(tmp_path / "emb"))
+        emb = spark.read.parquet(str(tmp_path / "emb"))
         idx = IvfIndex(emb, n_centroids=8)
         idx.materialize(str(tmp_path / "ivf"))
-        qvec = [float(x) for x in emb.where("vec_id = 0").collect()[0]["embedding"]]
-        res = idx.search(qvec, k=5, nprobe=2)
-        plan = res._sc._jvm.PythonSQLUtils.explainString(
-            res._jdf.queryExecution(), "formatted"
-        )
-        assert "PartitionFilters" in plan and "centroid_id" in plan
-        assert res.count() == 5
+        q = emb.where("vec_id = 0").select(F.col("embedding").alias("qvec"))
+        res = idx.search(q, k=5, nprobe=2)
+        assert len(res.collect()) == 5
+
+        jvm = spark._jvm
+        spark_plan = jvm.Class.forName("org.apache.spark.sql.execution.SparkPlan")
+
+        def nodes(node):
+            if not spark_plan.isInstance(node):
+                return
+            yield node
+            name = node.getClass().getSimpleName()
+            if name == "AdaptiveSparkPlanExec":
+                kids = [node.executedPlan()]
+            elif name.endswith("QueryStageExec"):
+                kids = [node.plan()]
+            else:
+                kids = [node.children().apply(i)
+                        for i in range(node.children().size())]
+            for k in kids:
+                yield from nodes(k)
+
+        final = res._jdf.queryExecution().executedPlan()
+        assert "isFinalPlan=true" in final.toString()
+        (scan,) = [n for n in nodes(final) if n.metrics().contains("numPartitions")]
+        filters = scan.partitionFilters().toString()
+        assert "dynamicpruningexpression(" in filters
+        assert "dynamicpruningexpression(true)" not in filters
+        assert scan.metrics().apply("numPartitions").value() < 8
 
     def test_batch_topk_two_stage_rank(self, spark, emb):
         """VERDICT r1 item 3: batch_topk must pre-rank within
@@ -219,14 +261,14 @@ class TestSimilarity:
 
     def test_brute_force_matches_plan_queries(self, spark, emb, sf001_dir):
         from medical_vector_database_ocr_ner_spark.operators.similarity import (
-            brute_force_topk,
+            brute_force_topk, vec_sql,
         )
         from medical_vector_database_ocr_ner_spark.plans.queries import (
             q_ann_topk_cosine,
         )
 
         qvec = [float(x) for x in emb.where("vec_id = 0").collect()[0]["embedding"]]
-        a = [r["vec_id"] for r in brute_force_topk(emb, qvec, 10).collect()]
+        a = [r["vec_id"] for r in brute_force_topk(emb, vec_sql(qvec), 10).collect()]
         b = [r["vec_id"] for r in q_ann_topk_cosine(spark, sf001_dir).collect()]
         assert a == b
 

@@ -1,7 +1,11 @@
 """Webtext wave Q (round 4): evaluation metrics — IVF recall@k and the
-lang-id confusion matrix — recomputed in plain Python."""
+lang-id confusion matrix — recomputed in plain Python — and the IVF
+queries' session storage."""
 
+import gc
 from collections import defaultdict
+
+import pytest
 
 from medical_vector_database_ocr_ner_spark.plans.queries import STOPS
 from medical_vector_database_ocr_ner_spark.plans.queries_ext import (
@@ -40,6 +44,27 @@ class TestIvfRecallAtK:
 
         t = q_ann_topk_cosine(spark, sf001_dir).select("vec_id")
         assert t.join(t, "vec_id").count() == 10
+
+
+@pytest.mark.parametrize(
+    "name", ["ivf_topk", "ivf_recall_at_k", "ivf_nprobe_sweep"]
+)
+def test_ivf_query_leaves_no_cache(spark, sf001_dir, name):
+    """Building and collecting an IVF query leaves no persisted RDD in
+    the session, even after both sides collect their garbage (a cached
+    assignment table is held by the cache manager, not by a reference).
+    Compared by RDD id: the GC may also release what earlier tests left."""
+    from medical_vector_database_ocr_ner_spark.plans.queries import QUERIES
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    for _ in range(2):
+        QUERIES[name].fn(spark, sf001_dir).collect()
+    gc.collect()
+    spark._jvm.System.gc()
+    assert persisted() - before == set()
 
 
 class TestLangIdConfusion:

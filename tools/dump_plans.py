@@ -48,12 +48,15 @@ SELECTED = [
      "pre-top-k, so no reducer ever holds a query's full corpus scores — "
      "the second the final per-query rank over n_partitions × k rows."),
     ("ivf_topk",
-     "IVF centroid assignment as a BroadcastNestedLoopJoin against a "
-     "1-row centroid relation (codebook as broadcast DATA — plan size "
-     "stays O(1) at any n_centroids × dim), argmax via transform + "
-     "array_max; probe filter on centroid_id prunes the candidate set "
-     "(parquet partition pruning once materialize() lays the index out "
-     "by centroid)."),
+     "One lazy plan, nothing collected or cached: the codebook is a "
+     "1-row collect_list over the first 8 vectors by id (broadcast DATA — "
+     "plan size stays O(1) at any n_centroids × dim); the assignment is a "
+     "BroadcastNestedLoopJoin against it with a transform + array_max "
+     "argmax; the probes are a Generate (posexplode of the sorted "
+     "centroid scores) over the codebook crossed with the 1-row query "
+     "relation, and the candidates a BroadcastHashJoin on centroid_id "
+     "(run-time partition pruning once materialize() lays the index out "
+     "by centroid) ending in TakeOrderedAndProject."),
     ("event_funnel",
      "Three stage aggregations all exchanged on user_id with partial "
      "aggregation map-side; event_type filters pushed into each scan "
@@ -317,9 +320,12 @@ SELECTED = [
      "partitions (parallel generation, no single-threaded driver "
      "collect); one partial+final HashAggregate pair above it."),
     ("ivf_nprobe_sweep",
-     "Four sweep points share ONE cached assignment table; each point's "
-     "scan carries the centroid-partition filter (nprobe/8 of the "
-     "index), and every eval join is a k-row relation."),
+     "ONE scoring pass over the assignment joined to the broadcast "
+     "probes; each scored row meets the four sweep points in a Generate "
+     "(explode) filtered on probe_rank < nprobe, and one Window "
+     "partitioned by nprobe (a WindowGroupLimit on each side of its "
+     "Exchange) keeps each point's top 10; the eval join is against the "
+     "k-row truth relation."),
     ("simhash_hot_bucket_split",
      "Two map-side-combinable HashAggregates above the signature agg — "
      "the candidate sets are COUNTED via sum C(occ,2), never "
